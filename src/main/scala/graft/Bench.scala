@@ -54,7 +54,9 @@ object Bench {
         val (c, a) = SparkEntry.ivfIndex(spark, sfDir); c.count(); a.count()
       },
       "dedup_minhash_build" -> timed("dedup_minhash_build")(
-        SparkEntry.minhashPairs(spark, sfDir).count()))
+        SparkEntry.minhashPairs(spark, sfDir).count()),
+      "dih_delta_fixture" -> timed("dih_delta_fixture")(
+        SparkEntry.dihDeltaIndex(spark, sfDir)))
     // tiered vs full compaction: the fixture (base + 12 appends) is
     // timed once; partial/full merge costs are reported as entries so
     // the round report shows partial << full

@@ -30,27 +30,46 @@ object SparkEntry {
     * scale; at cluster scale this would be sized to ~segment RAM. */
   final val DocsPerPart = 64
 
-  private val readers = new scala.collection.concurrent.TrieMap[String, IndexReader]
-
   def ftConfig(nParts: Int): IndexConfig = IndexConfig(
     numDocParts = nParts, numBuckets = 16, waves = 1,
     hotDfThreshold = 300L, saltShift = 16, shufflePartitions = 32)
+
+  /** Every per-corpus fixture (indexes, their derived frames, corpus
+    * stats) in ONE memo table keyed by (fixture name, key). Builds on
+    * distinct keys run concurrently — no lock — which [[langReaders]]
+    * relies on; a race on one key may build twice but keeps one. */
+  private val fixtures = new scala.collection.concurrent.TrieMap[(String, Any), Any]
+
+  private def fixture[V](name: String, key: Any)(build: => V): V =
+    fixtures.getOrElseUpdate((name, key), build).asInstanceOf[V]
+
+  /** max(doc_id) of a corpus, memoized: every index-build variant needs it
+    * to size numDocParts, and it never changes for a given snapshot dir —
+    * one job instead of one per build. */
+  def maxDocId(spark: SparkSession, sfDir: String): Long =
+    fixture("maxDocId", sfDir)(documents(spark, sfDir)
+      .agg(max("doc_id")).head().getLong(0))
+
+  private def documents(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/documents.parquet")
+
+  /** The corpus's base config: one docPart per DocsPerPart doc_ids. */
+  private def baseConfig(spark: SparkSession, sfDir: String): IndexConfig =
+    ftConfig((maxDocId(spark, sfDir) / DocsPerPart + 1).toInt)
+
+  /** Build `input` into a fresh dir under the temp root; returns the dir. */
+  private def buildFresh(spark: SparkSession, input: DataFrame,
+                         cfg: IndexConfig): String = {
+    val dir = TempDirs.dir("ix")
+    IndexBuilder.build(spark, input, dir, cfg)
+    dir
+  }
 
   /** documents -> input_hint shape, with the monotone docPart column.
     * repo must be CONSTANT here: the engine's canonical doc order is
     * (repo, path, commit) within a docPart, so doc_id-order-isomorphic
     * internal ids (which the SQL oracle's tie-breaks rely on) need the
     * sort to reduce to the zero-padded-doc_id path. */
-  private val maxDocIds = new scala.collection.concurrent.TrieMap[String, Long]
-
-  /** max(doc_id) of a corpus, memoized: every index-build variant needs it
-    * to size numDocParts, and it never changes for a given snapshot dir —
-    * one job instead of one per build. */
-  def maxDocId(spark: SparkSession, sfDir: String): Long =
-    maxDocIds.getOrElseUpdate(sfDir,
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .agg(max("doc_id")).head().getLong(0))
-
   def docsAsInput(docs: DataFrame): DataFrame =
     docs.select(
       (col("doc_id") / DocsPerPart).cast("int").as("docPart"),
@@ -60,18 +79,18 @@ object SparkEntry {
       col("lang"),
       col("text").as("content"))
 
-  def reader(spark: SparkSession, sfDir: String): IndexReader =
-    readers.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-      val dir = java.nio.file.Files.createTempDirectory("graft-ft").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
+  /** The corpus indexed under `variant` of the base config, memoized by
+    * (sfDir, resolved config): two variants that resolve to the same
+    * IndexConfig share one index. */
+  def index(spark: SparkSession, sfDir: String,
+            variant: IndexConfig => IndexConfig = identity): IndexReader = {
+    val cfg = variant(baseConfig(spark, sfDir))
+    fixture("index", (sfDir, cfg))(IndexReader(spark,
+      buildFresh(spark, docsAsInput(documents(spark, sfDir)), cfg), cfg))
+  }
 
-  private val sortedDocsDirs =
-    new scala.collection.concurrent.TrieMap[String, String]
+  def reader(spark: SparkSession, sfDir: String): IndexReader =
+    index(spark, sfDir)
 
   /** Index-time sort (lucene/misc/SortingMergePolicy.java): materialize
     * the corpus once as range-partitioned segments each stored in
@@ -79,15 +98,15 @@ object SparkEntry {
     * early-terminate per segment (EarlyTerminatingSortingCollector)
     * instead of sorting at query time. */
   def sortedDocsDir(s: SparkSession, sfDir: String): String =
-    sortedDocsDirs.getOrElseUpdate(sfDir, {
-      val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toString
-      s.read.parquet(s"$sfDir/documents.parquet")
+    fixture("sortedDocs", sfDir) {
+      val dir = TempDirs.dir("sorted")
+      documents(s, sfDir)
         .select("doc_id", "n_chars")
         .repartitionByRange(4, col("n_chars").desc, col("doc_id"))
         .sortWithinPartitions(col("n_chars").desc, col("doc_id"))
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
 
   /** Early-terminated sorted top-k over pre-sorted segments written by
     * [[sortedDocsDir]] (EarlyTerminatingSortingCollector): per-PARTITION
@@ -109,37 +128,28 @@ object SparkEntry {
       .orderBy(col("n_chars").desc, col("doc_id")).limit(k)
   }
 
-  private val minhashPairsCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]
-
   /** MinHash-LSH verified near-dup pairs materialized once per corpus
     * (same materialize-per-snapshot posture as the IVF assignments):
     * dedup_minhash reports them, dedup_clusters consumes them. */
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    minhashPairsCache.getOrElseUpdate(dir,
-      Dedup.minhashLsh(s.read.parquet(s"$dir/documents.parquet"), 3, 0.2)
-        .cache())
-
-  private val ivfIndexes =
-    new scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]
+    fixture("minhashPairs", dir)(
+      Dedup.minhashLsh(documents(s, dir), 3, 0.2).cache())
 
   /** Materialized IVF index per corpus: k-means centroids (2 Lloyd rounds,
     * 8 clusters) + the cached vector->cluster assignment, shared by every
     * ANN / near-dup query instead of recomputed per query. */
   def ivfIndex(s: SparkSession, sfDir: String): (DataFrame, DataFrame) =
-    ivfIndexes.getOrElseUpdate(sfDir, {
+    fixture("ivfIndex", sfDir) {
       val emb = s.read.parquet(s"$sfDir/embeddings.parquet")
       val cents = Ann.kmeansCentroids(emb, 8, 2).cache()
       val asg = Ann.ivfAssignTo(emb, cents).cache()
       (cents, asg)
-    })
-
-  private val maxAbsStats = new scala.collection.concurrent.TrieMap[String, Double]
+    }
 
   /** Int8 quantization scale, memoized per corpus (a stored corpus stat
     * beside the IVF centroids/assignments). */
   private def int8MaxAbs(s: SparkSession, sfDir: String): Double =
-    maxAbsStats.getOrElseUpdate(sfDir,
+    fixture("int8MaxAbs", sfDir)(
       Ann.corpusMaxAbs(s.read.parquet(s"$sfDir/embeddings.parquet")))
 
   /** Deterministic LatLonType point columns over `customer` — the spatial
@@ -151,35 +161,15 @@ object SparkEntry {
       .withColumn("lat", (col("c_custkey") * 7919 % 18000) / lit(100.0) - 90.0)
       .withColumn("lon", (col("c_custkey") * 104729 % 36000) / lit(100.0) - 180.0)
 
-  private val stemmedReaders = new scala.collection.concurrent.TrieMap[String, IndexReader]
-
   /** Same corpus indexed with the EnglishAnalyzer chain (possessive strip,
     * English stop set, Porter stem) — the ft_stemmed surface. */
   def stemmedReader(spark: SparkSession, sfDir: String): IndexReader =
-    stemmedReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(analyzer = "english")
-      val dir = java.nio.file.Files.createTempDirectory("graft-stem").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
-
-  private val langStemReaders = new scala.collection.concurrent.TrieMap[(String, String), IndexReader]
+    index(spark, sfDir, _.copy(analyzer = "english"))
 
   /** Same corpus indexed with a per-language light-stem chain (reference
     * de/GermanAnalyzer.java etc.): lang stop set + UniNE light stemmer. */
   def langReader(spark: SparkSession, sfDir: String, analyzer: String): IndexReader =
-    langStemReaders.getOrElseUpdate((sfDir, analyzer), {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(analyzer = analyzer)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-$analyzer").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
+    index(spark, sfDir, _.copy(analyzer = analyzer))
 
   /** Build several language indexes CONCURRENTLY: the builds are
     * independent jobs, so they are submitted from parallel driver threads
@@ -206,9 +196,7 @@ object SparkEntry {
     import s.implicits._
     r.blocks(terms)
       .flatMap { b =>
-        val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-          graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-            b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+        val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b.block)
         docs.indices.iterator.map(i => (docs(i), tfs(i).toLong))
       }.toDF("docId", "tf")
       .groupBy("docId").agg(sum("tf").as("tf"))
@@ -218,63 +206,34 @@ object SparkEntry {
   private def stemTf(s: SparkSession, r: IndexReader, stem: String): DataFrame =
     termsTf(s, r, Seq(stem))
 
-  private val synReaders = new scala.collection.concurrent.TrieMap[String, IndexReader]
-
   /** Same corpus indexed WITH index-time synonym rules (reference
     * synonym/SynonymFilter.java, keepOrig): "fast"->"quick" (single) and
     * "hash agg"->"hashagg" (multi-token LHS collapse). Injected tokens
     * sit at the match-start position, so phrases match through them. */
   def synReader(spark: SparkSession, sfDir: String): IndexReader =
-    synReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(synonyms = Seq(
-          "fast" -> Seq("quick"), "hash agg" -> Seq("hashagg")))
-      val dir = java.nio.file.Files.createTempDirectory("graft-syn").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
-
-  private val compoundReaders = new scala.collection.concurrent.TrieMap[String, IndexReader]
+    index(spark, sfDir, _.copy(synonyms = Seq(
+      "fast" -> Seq("quick"), "hash agg" -> Seq("hashagg"))))
 
   /** Same corpus indexed with compound decomposition (reference compound/
     * DictionaryCompoundWordTokenFilter.java): dictionary {"wind"}, so
     * "window" also indexes the subword "wind" at its position. */
   def compoundReader(spark: SparkSession, sfDir: String): IndexReader =
-    compoundReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(compoundDict = Seq("wind"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-comp").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
-
-  private val delReaders =
-    new scala.collection.concurrent.TrieMap[String, (IndexReader, IndexReader)]
+    index(spark, sfDir, _.copy(compoundDict = Seq("wind")))
 
   /** Same corpus with every 'dup'-containing doc tombstoned: (reader over
     * the deleted-but-not-compacted index, reader over its compaction).
     * Pre-compaction stats still count the deleted docs; the compacted
     * index recomputes them over survivors (reference merge semantics). */
   def deletedReaders(spark: SparkSession, sfDir: String): (IndexReader, IndexReader) =
-    delReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-      val dir = java.nio.file.Files.createTempDirectory("graft-del").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
+    fixture("deleted", sfDir) {
+      val cfg = baseConfig(spark, sfDir)
+      val dir = buildFresh(spark, docsAsInput(documents(spark, sfDir)), cfg)
       IndexBuilder.deleteByQuery(spark, dir, cfg,
         BoolQ(Seq((Occur.Must, TermQ("dup")))))
-      val cdir = java.nio.file.Files.createTempDirectory("graft-cpt").toString
+      val cdir = TempDirs.dir("compacted")
       IndexBuilder.compact(spark, dir, cdir, cfg)
       (IndexReader(spark, dir, cfg), IndexReader(spark, cdir, cfg))
-    })
-
-  private val updReaders =
-    new scala.collection.concurrent.TrieMap[String, (MultiIndexReader, IndexReader)]
+    }
 
   /** Corpus with every 'vector'-containing doc atomically UPDATED (text
     * rewrite vector -> vectorized) under its unchanged unique key
@@ -282,14 +241,12 @@ object SparkEntry {
     * still counted in stats, new versions live in a delta — , compacted
     * index where only the rewritten corpus remains). */
   def updatedReaders(spark: SparkSession, sfDir: String): (MultiIndexReader, IndexReader) =
-    updReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
+    fixture("updated", sfDir) {
+      val docs = documents(spark, sfDir)
       // fresh docParts for the new versions: shift past the base grid
-      val off = (maxId / DocsPerPart + 1) * DocsPerPart
+      val off = (maxDocId(spark, sfDir) / DocsPerPart + 1) * DocsPerPart
       val cfg = ftConfig((2 * off / DocsPerPart).toInt)
-      val dir = java.nio.file.Files.createTempDirectory("graft-upd").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
+      val dir = buildFresh(spark, docsAsInput(docs), cfg)
       val upd = docs.where(col("text").contains("vector"))
         .withColumn("text", regexp_replace(col("text"), "vector", "vectorized"))
       val updInput = upd.select(
@@ -300,19 +257,11 @@ object SparkEntry {
         col("lang"),
         col("text").as("content"))
       IndexBuilder.updateDocs(spark, dir, updInput, cfg)
-      val cdir = java.nio.file.Files.createTempDirectory("graft-updc").toString
+      val cdir = TempDirs.dir("compacted")
       IndexBuilder.compact(spark, dir, cdir, cfg)
       (MultiIndexReader.open(spark, dir, cfg.numBuckets, cacheData = false),
         IndexReader(spark, cdir, cfg))
-    })
-
-  /** Memoized dih_delta result frame (the query builds a real index +
-    * delta on first call; later calls reuse the session's plan). */
-  private val dihDeltaFrames =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]
-
-  private val tierTimes =
-    new scala.collection.concurrent.TrieMap[String, (Double, Double)]
+    }
 
   /** Tiered-compaction cost fixture (TieredMergePolicy posture, reference
     * index/TieredMergePolicy.java:75-86): a quarter-corpus base + 12
@@ -323,18 +272,16 @@ object SparkEntry {
     * ft_tiered_full so the report shows partial-merge cost << full
     * rewrite. */
   def tieredCompactTimes(spark: SparkSession, sfDir: String): (Double, Double) =
-    tierTimes.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    fixture("tiered", sfDir) {
+      val docs = documents(spark, sfDir)
       // big cold base, tiny hot tier: partial cost must track the MERGED
       // TIER's size while the full rewrite tracks the whole collection
       // (half corpus: the full-corpus variant doubles fixture cost for
       // the same partial-vs-full contrast at bench scale)
-      val base = docs.where(col("doc_id") % 2 === 0)
-      val maxId = maxDocId(spark, sfDir)
-      val baseParts = (maxId / DocsPerPart + 1).toInt
+      val baseParts = baseConfig(spark, sfDir).numDocParts
       val cfg = ftConfig(baseParts + 12)
-      val dir = java.nio.file.Files.createTempDirectory("graft-tier").toString
-      IndexBuilder.build(spark, docsAsInput(base), dir, cfg)
+      val dir = buildFresh(spark,
+        docsAsInput(docs.where(col("doc_id") % 2 === 0)), cfg)
       (0 until 12).foreach { k =>
         val slice = docs.where(col("doc_id") % 2048 === k * 4 + 1)
         val in = docsAsInput(slice)
@@ -349,27 +296,15 @@ object SparkEntry {
         require(IndexBuilder.compactTiered(spark, dir, cfg).isDefined,
           "tiered fixture must trigger a merge")
       }
-      val cdir = java.nio.file.Files.createTempDirectory("graft-tierc").toString
+      val cdir = TempDirs.dir("compacted")
       val tFull = sec(IndexBuilder.compact(spark, dir, cdir, cfg))
       (tPartial, tFull)
-    })
-
-  private val revReaders = new scala.collection.concurrent.TrieMap[String, IndexReader]
+    }
 
   /** Same corpus with the reversed-token "rev:" field indexed — the
     * leading-wildcard surface (ReversedWildcardFilterFactory analog). */
   def revReader(spark: SparkSession, sfDir: String): IndexReader =
-    revReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(reverseTokens = true)
-      val dir = java.nio.file.Files.createTempDirectory("graft-rev").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
-
-  private val nrtReaders = new scala.collection.concurrent.TrieMap[String, MultiIndexReader]
+    index(spark, sfDir, _.copy(reverseTokens = true))
 
   /** Same corpus as [[reader]] but ingested as base + 2 appended deltas
     * (split at doc_id thirds, rounded to DocsPerPart): the docPart ranges
@@ -377,23 +312,75 @@ object SparkEntry {
     * remain order-isomorphic to doc_id and the SQL oracle's tie-breaks
     * hold. */
   def nrtReader(spark: SparkSession, sfDir: String): MultiIndexReader =
-    nrtReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cut1 = ((maxId + 1) / 3 / DocsPerPart).max(1) * DocsPerPart
+    fixture("nrt", sfDir) {
+      val docs = documents(spark, sfDir)
+      val cut1 = ((maxDocId(spark, sfDir) + 1) / 3 / DocsPerPart).max(1) * DocsPerPart
       val cut2 = 2 * cut1
-      val nParts = (maxId / DocsPerPart + 1).toInt
-      val cfg = ftConfig(nParts)
-      val dir = java.nio.file.Files.createTempDirectory("graft-nrt").toString
-      IndexBuilder.build(spark,
-        docsAsInput(docs.where(col("doc_id") < cut1)), dir, cfg)
+      val cfg = baseConfig(spark, sfDir)
+      val dir = buildFresh(spark,
+        docsAsInput(docs.where(col("doc_id") < cut1)), cfg)
       IndexBuilder.append(spark,
         docsAsInput(docs.where(col("doc_id") >= cut1 && col("doc_id") < cut2)),
         dir, 0L, cfg)
       IndexBuilder.append(spark,
         docsAsInput(docs.where(col("doc_id") >= cut2)), dir, 1L, cfg)
       MultiIndexReader.open(spark, dir, cfg.numBuckets)
-    })
+    }
+
+  /** DIH delta import fixture (reference DocBuilder.java delta flow:
+    * deltaQuery finds keys whose last_modified > last_index_time,
+    * deltaImportQuery re-imports those rows through the transformer
+    * chain into the EXISTING index; new versions replace old by PK).
+    * Here: full import = latest event per user_id at or before
+    * last_index_time (max ts - 7 days), built as a real index; delta =
+    * later rows, routed through a TemplateTransformer and applied with
+    * updateDocs (tombstone-by-key + delta sub-index — the resumable
+    * build machinery). Returns the merged view and the first delta
+    * docPart. */
+  def dihDeltaIndex(s: SparkSession, dir: String): (MultiIndexReader, Int) =
+    fixture("dihDelta", dir) {
+      import graft.operators.DataImport
+      import graft.operators.DataImport.Field
+      import org.apache.spark.sql.types.{LongType, StringType}
+      val ev = s.read.parquet(s"$dir/events.parquet")
+      // .get, not .getTimestamp: the column may read back as
+      // TimestampNTZ (LocalDateTime); lit() handles either
+      val cut = ev.agg((max(col("ts")) - expr("INTERVAL 7 DAYS")).as("c"))
+        .head().get(0)
+      val w = Window.partitionBy("user_id")
+        .orderBy(col("ts").desc, col("event_id").desc)
+      def latest(df: DataFrame): DataFrame =
+        df.withColumn("rn", row_number().over(w))
+          .where(col("rn") === 1).drop("rn")
+      // the transformer chain (TemplateTransformer) builds the doc body
+      def throughChain(df: DataFrame): DataFrame =
+        DataImport.transform(
+          df.select(col("user_id"), col("event_id"), col("event_type"),
+            col("props")),
+          Seq(Field("content", template = Some("${e.event_type} ${e.props}"))),
+          Seq("TemplateTransformer"),
+          out = Seq(("user_id", LongType), ("event_id", LongType),
+            ("content", StringType)))
+      val maxUid = ev.agg(max(col("user_id"))).head().getLong(0)
+      val baseParts = (maxUid / DocsPerPart + 1).toInt
+      def asInput(df: DataFrame, off: Int): DataFrame =
+        throughChain(df).select(
+          (lit(off) + (col("user_id") / DocsPerPart)).cast("int")
+            .as("docPart"),
+          lit("events").as("repo"),
+          lpad(col("user_id").cast("string"), 9, "0").as("path"),
+          col("event_id").cast("string").as("commit"),
+          lit("en").as("lang"),
+          col("content"))
+      val cfg = ftConfig(2 * baseParts)
+      val ixDir = buildFresh(s,
+        asInput(latest(ev.where(col("ts") <= lit(cut))), 0), cfg)
+      IndexBuilder.updateDocs(s,
+        ixDir, asInput(latest(ev.where(col("ts") > lit(cut))), baseParts),
+        cfg)
+      (MultiIndexReader.open(s, ixDir, cfg.numBuckets, cacheData = false),
+        baseParts)
+    }
 
   /** internal docId -> source doc_id (path is the zero-padded doc_id). */
   private def idMap(r: SearchReader): DataFrame =
@@ -447,9 +434,7 @@ object SparkEntry {
       val r = reader(s, dir)
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-            graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-              b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+          val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b.block)
           docs.indices.iterator.map(i => (docs(i), tfs(i).toLong))
         }.toDF("docId", "tf")
         .join(idMap(r), "docId").select("doc_id", "tf").orderBy("doc_id")
@@ -462,9 +447,7 @@ object SparkEntry {
       val r = reader(s, dir)
       r.blocks(Seq("window"))
         .flatMap { b =>
-          graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(
-            b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
-            b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).iterator
+          graft.codec.PostingsCodec.decode(b.block).iterator
             .map(p => (p.docId, p.positions.mkString(",")))
         }.toDF("docId", "pos_list")
         .join(idMap(r), "docId").select("doc_id", "pos_list")
@@ -735,9 +718,7 @@ object SparkEntry {
       val r = reader(s, dir)
       val terms = Seq("merge", "stream", "vector")
       val postings = r.blocks(terms).flatMap { b =>
-        val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-          graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-            b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+        val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b.block)
         docs.indices.iterator.map(i => (b.term, docs(i), tfs(i)))
       }.toDF("query_id", "docId", "tf")
       val named = postings.join(idMap(r), "docId")
@@ -776,9 +757,7 @@ object SparkEntry {
       val r = stemmedReader(s, dir)
       r.blocks(Seq("custom"))
         .flatMap { b =>
-          val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-            graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-              b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+          val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b.block)
           docs.indices.iterator.map(i => (docs(i), tfs(i).toLong))
         }.toDF("docId", "tf")
         .join(idMap(r), "docId").select("doc_id", "tf").orderBy("doc_id")
@@ -3865,10 +3844,7 @@ object SparkEntry {
         val wvB = s.sparkContext.broadcast(variantScores.toMap)
         r.blocks(variantScores.map(_._1))
           .flatMap { b =>
-            val (docs, _, _) = graft.codec.PostingsCodec.decodeDocs(
-              graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-                b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-                b.posBytes))
+            val (docs, _, _) = graft.codec.PostingsCodec.decodeDocs(b.block)
             docs.iterator.map(d => (d, wvB.value(b.term)))
           }.toDF("docId", "s")
           .groupBy("docId").agg(sum("s").as("score"))
@@ -4126,10 +4102,7 @@ object SparkEntry {
       val idf = math.log(n.toDouble / (st.df + 1.0)) + 1.0
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          val (ids, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-            graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-              b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-              b.posBytes))
+          val (ids, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b.block)
           ids.indices.iterator.map(i => (ids(i), tfs(i).toLong))
         }.toDF("docId", "tf")
         .join(idMap(r), "docId")
@@ -4313,9 +4286,7 @@ object SparkEntry {
         !$"term".startsWith("path:") && !$"term".startsWith("rev:"))
         .map(_.term)
       val rows = r.blocks((ctx +: cands).distinct).flatMap { b =>
-        graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(b.term,
-          b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial,
-          b.docBytes, b.nrmBytes, b.posBytes)).iterator
+        graft.codec.PostingsCodec.decode(b.block).iterator
           .map(p => (p.docId, b.term, p.positions))
       }
       rows.groupByKey(_._1).flatMapGroups { (_, it) =>
@@ -4447,9 +4418,7 @@ object SparkEntry {
       val r = reader(s, dir)
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(
-            b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
-            b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).iterator
+          graft.codec.PostingsCodec.decode(b.block).iterator
             .map { p =>
               var sum = 0.0
               var j = 0
@@ -4619,9 +4588,7 @@ object SparkEntry {
       val r = reader(s, dir)
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(
-            b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
-            b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).iterator
+          graft.codec.PostingsCodec.decode(b.block).iterator
             .map { p =>
               var mn = Float.MaxValue
               var mx = Float.MinValue
@@ -5004,9 +4971,7 @@ object SparkEntry {
       val idf = 1.0 + math.log(cs.maxDoc / (st.df + 1.0))
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(
-            b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
-            b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).iterator
+          graft.codec.PostingsCodec.decode(b.block).iterator
             .map(p => (p.docId, p.tf,
               SmallFloat.byte315ToFloat(p.norm).toDouble))
         }.toDF("docId", "termfreq", "nrm")
@@ -5711,67 +5676,17 @@ object SparkEntry {
         .orderBy("id")
     }),
 
-    /** DIH delta import (reference DocBuilder.java delta flow:
-      * deltaQuery finds keys whose last_modified > last_index_time,
-      * deltaImportQuery re-imports those rows through the transformer
-      * chain into the EXISTING index; new versions replace old by PK).
-      * Here: full import = latest event per user_id at or before
-      * last_index_time (max ts - 7 days), built as a real index; delta =
-      * later rows, routed through a TemplateTransformer and applied with
-      * updateDocs (tombstone-by-key + delta sub-index — the resumable
-      * build machinery). Output = the LIVE doc per key from the merged
-      * MultiIndexReader view, tagged with which import produced it. */
-    "dih_delta" -> ((s, dir) => dihDeltaFrames.getOrElseUpdate(dir, {
-      import graft.operators.DataImport
-      import graft.operators.DataImport.Field
-      import org.apache.spark.sql.types.{LongType, StringType}
-      val ev = s.read.parquet(s"$dir/events.parquet")
-      // .get, not .getTimestamp: the column may read back as
-      // TimestampNTZ (LocalDateTime); lit() handles either
-      val cut = ev.agg((max(col("ts")) - expr("INTERVAL 7 DAYS")).as("c"))
-        .head().get(0)
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      def latest(df: DataFrame): DataFrame =
-        df.withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1).drop("rn")
-      // the transformer chain (TemplateTransformer) builds the doc body
-      def throughChain(df: DataFrame): DataFrame =
-        DataImport.transform(
-          df.select(col("user_id"), col("event_id"), col("event_type"),
-            col("props")),
-          Seq(Field("content", template = Some("${e.event_type} ${e.props}"))),
-          Seq("TemplateTransformer"),
-          out = Seq(("user_id", LongType), ("event_id", LongType),
-            ("content", StringType)))
-      val maxUid = ev.agg(max(col("user_id"))).head().getLong(0)
-      val baseParts = (maxUid / DocsPerPart + 1).toInt
-      def asInput(df: DataFrame, off: Int): DataFrame =
-        throughChain(df).select(
-          (lit(off) + (col("user_id") / DocsPerPart)).cast("int")
-            .as("docPart"),
-          lit("events").as("repo"),
-          lpad(col("user_id").cast("string"), 9, "0").as("path"),
-          col("event_id").cast("string").as("commit"),
-          lit("en").as("lang"),
-          col("content"))
-      val cfg = ftConfig(2 * baseParts)
-      val ixDir = java.nio.file.Files.createTempDirectory("graft-dihd")
-        .toString
-      IndexBuilder.build(s, asInput(latest(ev.where(col("ts") <= lit(cut))),
-        0), ixDir, cfg)
-      IndexBuilder.updateDocs(s,
-        ixDir, asInput(latest(ev.where(col("ts") > lit(cut))), baseParts),
-        cfg)
-      val r = MultiIndexReader.open(s, ixDir, cfg.numBuckets,
-        cacheData = false)
+    /** DIH delta import: the LIVE doc per key from the merged view of
+      * [[dihDeltaIndex]], tagged with which import produced it. */
+    "dih_delta" -> ((s, dir) => {
+      val (r, baseParts) = dihDeltaIndex(s, dir)
       r.liveOnly(r.docmeta.toDF())
         .select(col("path").as("user_key"),
           col("commit").cast("long").as("event_id"),
-          when(shiftright(col("docId"), 40) >= baseParts, "delta")
+          when(shiftright(col("docId"), Ids.DocIdShift) >= baseParts, "delta")
             .otherwise("full").as("src"))
         .orderBy("user_key")
-    })),
+    }),
 
     "dih_nested" -> ((s, dir) => {
       val ord = s.read.parquet(s"$dir/orders.parquet")

@@ -1083,16 +1083,9 @@ object IndexBuilder {
         build(spark, spark.emptyDataFrame, out, cfg)
         // sources are invisible now — cleanup is safe and best-effort
         // (a crash here just leaves dead files for the next call)
-        srcs.foreach(d => deleteRecursively(Paths.get(d)))
+        srcs.foreach(d => TempDirs.deleteRecursively(Paths.get(d)))
         out
       }
     }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p))
-      Option(p.toFile.listFiles()).toSeq.flatten
-        .foreach(f => deleteRecursively(f.toPath))
-    Files.deleteIfExists(p)
-  }
 
 }

@@ -69,7 +69,11 @@ final case class BlockRow(bucket: Int, term: String, firstDoc: Long,
                           lastDoc: Long, count: Int, maxTf: Int,
                           sumTf: Long, maxPartial: Float,
                           docBytes: Array[Byte], nrmBytes: Array[Byte],
-                          posBytes: Array[Byte])
+                          posBytes: Array[Byte]) {
+  /** The codec's view of this row (a method: the encoder schema is unchanged). */
+  def block: graft.codec.PostingBlock = graft.codec.PostingBlock(term, firstDoc,
+    lastDoc, count, maxTf, sumTf, maxPartial, docBytes, nrmBytes, posBytes)
+}
 
 /** ON-DISK block row: keyed by the 63-bit term key, NOT the term string.
   * Term text exists only in the dictionary (termstats) — the merge

@@ -232,9 +232,7 @@ final class JoinScorer(reader: SearchReader) {
     val cacheB = spark.sparkContext.broadcast(
       reader.normCacheFor(IndexBuilder.fieldOfTerm(term)))
     reader.blocks(Seq(term)).flatMap { b =>
-      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b.block)
       val cache = cacheB.value
       (0 until docs.length).iterator.map { i =>
         ClauseHit(docs(i), clause, kind,
@@ -264,10 +262,7 @@ final class JoinScorer(reader: SearchReader) {
     reader.blocks(present)
       .where($"firstDoc" <= target && $"lastDoc" >= target)
       .flatMap { b =>
-        val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-          graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-            b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-            b.posBytes))
+        val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b.block)
         val i = java.util.Arrays.binarySearch(docs, target)
         if (i >= 0)
           Iterator.single((b.term,
@@ -282,9 +277,7 @@ final class JoinScorer(reader: SearchReader) {
                         boost: Float = 1f): Dataset[ClauseHit] = {
     if (terms.isEmpty) return spark.emptyDataset[ClauseHit]
     reader.blocks(terms).flatMap { b =>
-      val (docs, _, _) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+      val (docs, _, _) = PostingsCodec.decodeDocs(b.block)
       docs.iterator.map(d => ClauseHit(d, clause, kind, boost))
     }.dropDuplicates("docId").as[ClauseHit]
   }
@@ -314,9 +307,7 @@ final class JoinScorer(reader: SearchReader) {
     val rows: Dataset[(Long, Int, Array[Int], Byte)] =
       reader.blocks(terms.distinct).flatMap { b =>
         val idxs = tIdxB.value(b.term)
-        PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-          b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-          b.posBytes)).iterator.flatMap(p =>
+        PostingsCodec.decode(b.block).iterator.flatMap(p =>
           idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
       }
     rows.groupByKey(_._1).mapGroups { (docId, it) =>
@@ -382,9 +373,7 @@ final class JoinScorer(reader: SearchReader) {
     val tIdxB = spark.sparkContext.broadcast(termSlots)
     reader.blocks(slots.flatten.distinct).flatMap { b =>
       val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap(p =>
+      PostingsCodec.decode(b.block).iterator.flatMap(p =>
         idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       val bySlot = Array.fill(nSlots)(List.empty[Array[Int]])
@@ -442,9 +431,7 @@ final class JoinScorer(reader: SearchReader) {
     val tIdxB = spark.sparkContext.broadcast(dfa.terms.zipWithIndex.toMap)
     reader.blocks(dfa.terms.toSeq).flatMap { b =>
       val tid = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator
+      PostingsCodec.decode(b.block).iterator
         .map(p => (p.docId, tid, p.positions, p.norm))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       val pairs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
@@ -480,9 +467,7 @@ final class JoinScorer(reader: SearchReader) {
     val tIdxB = spark.sparkContext.broadcast(termIdx)
     reader.blocks(terms.distinct).flatMap { b =>
       val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-        b.posBytes)).iterator.flatMap(p =>
+      PostingsCodec.decode(b.block).iterator.flatMap(p =>
         idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       val byTerm = new Array[Array[Int]](nTerms)
@@ -527,9 +512,7 @@ final class JoinScorer(reader: SearchReader) {
     val tIdxB = spark.sparkContext.broadcast(termIdx)
     reader.blocks(terms.distinct).flatMap { b =>
       val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap(p =>
+      PostingsCodec.decode(b.block).iterator.flatMap(p =>
         idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       val byTerm = new Array[Array[Int]](nTerms)
@@ -583,9 +566,7 @@ final class JoinScorer(reader: SearchReader) {
     val tIdxB = spark.sparkContext.broadcast(termSlots)
     reader.blocks(allTerms).flatMap { b =>
       val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap(p =>
+      PostingsCodec.decode(b.block).iterator.flatMap(p =>
         idxs.map(i => (p.docId, i, p.positions, p.norm)))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       val bySlot = new Array[Array[Int]](nSlots)
@@ -621,9 +602,7 @@ final class JoinScorer(reader: SearchReader) {
     val cacheB = spark.sparkContext.broadcast(
       reader.normCacheFor(IndexBuilder.fieldOfTerm(present.head)))
     reader.blocks(present.distinct).flatMap { b =>
-      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b.block)
       docs.indices.iterator.map(i => (docs(i), tfs(i), nrms(i)))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       var freq = 0
@@ -650,9 +629,7 @@ final class JoinScorer(reader: SearchReader) {
     val terms = if (excPresent) Seq(include, exclude) else Seq(include)
     reader.blocks(terms.distinct).flatMap { b =>
       val isInc = b.term == inc
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator
+      PostingsCodec.decode(b.block).iterator
         .map(p => (p.docId, isInc, p.positions, p.norm))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       var incPos: Array[Int] = null
@@ -716,9 +693,7 @@ final class JoinScorer(reader: SearchReader) {
     val rIdxB = spark.sparkContext.broadcast(roleIdx)
     reader.blocks((big :+ little).distinct).flatMap { b =>
       val idxs = rIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap(p =>
+      PostingsCodec.decode(b.block).iterator.flatMap(p =>
         idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       val byRole = new Array[Array[Int]](nBig + 1)
@@ -785,9 +760,7 @@ final class JoinScorer(reader: SearchReader) {
     val startPos = start
     val endPos = end
     reader.blocks(Seq(term)).flatMap { b =>
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap { p =>
+      PostingsCodec.decode(b.block).iterator.flatMap { p =>
         // positions are ascending: skip past < startPos, count < endPos
         var j = 0
         while (j < p.positions.length && p.positions(j) < startPos) j += 1

@@ -201,9 +201,15 @@ object StandardParser {
         case _ =>
           while (!eof && !s(pos).isWhitespace && s(pos) != '(' &&
             s(pos) != ')') pos += 1
+          // "date:[a TO b]" would split at its inner spaces into garbage
+          // terms; only the default field has a range syntax here
+          require(FieldedRange.findPrefixOf(s.substring(start, pos)).isEmpty,
+            s"fielded ranges are not supported: ${s.substring(start)}")
       }
       lowerLeaf(s.substring(start, pos))
     }
+
+    private val FieldedRange = "[A-Za-z_][A-Za-z0-9_.]*:[\\[{]".r
 
     private def suffix(): Unit =
       while (!eof && !s(pos).isWhitespace && s(pos) != ')' && s(pos) != '(')

@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.codec.{PostingBlock, PostingsCodec}
+import graft.codec.PostingsCodec
 import graft.index.{BlockRow, Ids, SearchReader}
 
 /** Block-max WAND top-k over the compressed term-partitioned postings
@@ -159,9 +159,7 @@ object WandScorer {
       else if (cluster.nonEmpty) {
         val b0 = cluster.head
         val merged = cluster.toArray.flatMap(b =>
-          PostingsCodec.decode(PostingBlock(b.term, b.firstDoc, b.lastDoc,
-            b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-            b.posBytes))).sortBy(_.docId)
+          PostingsCodec.decode(b.block)).sortBy(_.docId)
         out ++= PostingsCodec.encode(b0.term, merged.iterator, cache)
           .map(b => BlockRow(b0.bucket, b.term, b.firstDoc, b.lastDoc,
             b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
@@ -202,9 +200,7 @@ object WandScorer {
 
     private def decodeBlock(i: Int): Unit = {
       val b = blocks(i)
-      val t = PostingsCodec.decodeDocs(PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes))
+      val t = PostingsCodec.decodeDocs(b.block)
       docs = t._1; tfs = t._2; nrms = t._3
     }
 

@@ -15,7 +15,7 @@ object Demo {
     val query = if (args.nonEmpty) args(0) else "import spark"
     val nDocs = if (args.length > 1) args(1).toLong else 2000L
     val dir = if (args.length > 2) args(2)
-    else java.nio.file.Files.createTempDirectory("graft-demo").toString
+    else graft.index.TempDirs.dir("demo") // removed at exit
     val k = if (args.length > 3) args(3).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()

@@ -132,7 +132,7 @@ object ScalingBench {
       IndexBuilder.build(spark, CorpusGen.generate(spark, n,
         parts = 256).toDF(), dir, cfg)
       val sec = (System.nanoTime() - t0) / 1e9
-      if (!keep) deleteRec(Paths.get(dir))
+      if (!keep) TempDirs.deleteRecursively(Paths.get(dir))
       (sec, IndexBuilder.lastStageTimes, IndexReader(spark, dir, cfg))
     }
 
@@ -184,13 +184,7 @@ object ScalingBench {
     Files.writeString(Paths.get(outJson), json)
     println(json)
     spark.stop()
-    deleteRec(shm)
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).forEach(deleteRec)
-    Files.deleteIfExists(p)
+    TempDirs.deleteRecursively(shm)
   }
 
   // ---- combine two level JSONs into BENCH/BASELINE.md ----

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,7 +45,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     // not (its marker is missing) — resume must redo ONLY wave 1
     val part = SparkSuite.tmpDir("graft-part")
     IndexBuilder.build(spark, input, part, cfg)
-    deleteRec(Paths.get(s"$part/postings/wave=1"))
+    TempDirs.deleteRecursively(Paths.get(s"$part/postings/wave=1"))
     Files.deleteIfExists(IndexBuilder.markerPath(part, "postings_wave_1"))
     Files.deleteIfExists(IndexBuilder.markerPath(part, "done"))
     val segMtime = Files.getLastModifiedTime(
@@ -436,9 +435,4 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(IndexBuilder.deleteByQuery(spark, dir, cfg, q) > 0)
     assert(!Files.exists(Paths.get(dir, "write.lock")), "lock released")
   }
-
-  private def deleteRec(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f =>
-        Files.deleteIfExists(f))
 }

@@ -16,6 +16,6 @@ object SparkSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh dir under the per-JVM temp root (removed at exit). */
+  def tmpDir(prefix: String): String = graft.index.TempDirs.dir(prefix)
 }

@@ -159,6 +159,16 @@ class StandardParserSpec extends AnyFunSuite {
     assert(pLt.lo == "path:" && pLt.hi == "path:main")
   }
 
+  test("fielded ranges are rejected, not split into garbage terms") {
+    for (q <- Seq("date:[alpha TO beta]", "date:{alpha TO beta}",
+      "gamma AND title:[a TO *]", "+path:{a TO b]"))
+      intercept[IllegalArgumentException](p(q))
+    // the default-field range and a plain fielded term still parse
+    assert(p("[alpha TO beta]").clauses ==
+      Seq((S, RangeQ("alpha", "beta", incLo = true, incHi = true))))
+    assert(p("path:Main").clauses == Seq((S, TermQ("path:main"))))
+  }
+
   test("leaf semantics agree with the classic parser (shared lowering)") {
     for (q <- Seq("hello", "+hello", "-hello", "\"alpha beta\"",
       "term*", "te?m", "term~1", "/re.*/", "path:Main", "term^2.5",

@@ -3,6 +3,12 @@
 SparkEntry query parquet (written by graft.Verify) against its DuckDB
 oracle SQL on the same sf dir. Usage (args auto-detected by content):
     python3 tools/check_oracle.py <verifyOutDir> <sfDir> [query...]
+
+Regression mode: compare two Verify outputs (e.g. before/after a
+refactor) query by query, row for row in stored order, with exact cells
+(no rounding, -0.0 != 0.0, NaN == NaN) and exact arrow types; exits 1 on
+any difference:
+    python3 tools/check_oracle.py <verifyOutDir> --against <otherVerifyOutDir> [query...]
 """
 import json, math, os, sys
 import duckdb
@@ -26,7 +32,61 @@ def norm_rows(cols, rows):
     out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
     return sorted(out), [cols[i] for i in order]
 
+def exact_cell(v):
+    if isinstance(v, float):
+        return repr(v)
+    if isinstance(v, (list, tuple)):
+        return "[" + ",".join(exact_cell(x) for x in v) + "]"
+    if isinstance(v, dict):
+        return "{" + ",".join(f"{k}:{exact_cell(x)}" for k, x in v.items()) + "}"
+    return repr(v)
+
+def read_exact(qdir):
+    tbl = pq.read_table(qdir)
+    schema = [(f.name, str(f.type)) for f in tbl.schema]
+    cols = [[exact_cell(v) for v in tbl.column(i).to_pylist()]
+            for i in range(tbl.num_columns)]
+    return schema, list(zip(*cols)) if cols else []
+
+def query_names(out_dir):
+    with open(os.path.join(out_dir, "oracle_sql.json")) as f:
+        names = set(json.load(f))
+    return names | {d for d in os.listdir(out_dir)
+                    if os.path.isdir(os.path.join(out_dir, d))}
+
+def against(out_dir, other_dir, only):
+    names = sorted(query_names(out_dir) | query_names(other_dir))
+    n_same = n_diff = 0
+    for name in names:
+        if only and name not in only:
+            continue
+        qa, qb = os.path.join(out_dir, name), os.path.join(other_dir, name)
+        if not (os.path.isdir(qa) and os.path.isdir(qb)):
+            print(f"MISSING  {name}: only in {qa if os.path.isdir(qa) else qb}")
+            n_diff += 1
+            continue
+        (sa, ra), (sb, rb) = read_exact(qa), read_exact(qb)
+        if sa != sb:
+            print(f"SCHEMA   {name}: {sa} vs {sb}")
+        elif ra != rb:
+            first = next((i for i, (x, y) in enumerate(zip(ra, rb)) if x != y),
+                         min(len(ra), len(rb)))
+            kind = "ORDER " if sorted(ra) == sorted(rb) else "VALUES"
+            print(f"{kind}   {name}: rows {len(ra)} vs {len(rb)}; first diff "
+                  f"at row {first}: {ra[first:first + 1]} vs {rb[first:first + 1]}")
+        else:
+            print(f"SAME     {name} ({len(ra)} rows)")
+            n_same += 1
+            continue
+        n_diff += 1
+    print(f"\n{n_same} same, {n_diff} differ")
+    sys.exit(1 if n_diff else 0)
+
 def main():
+    if "--against" in sys.argv[1:]:
+        i = sys.argv.index("--against")
+        rest = sys.argv[1:i] + sys.argv[i + 2:]
+        against(rest[0], sys.argv[i + 1], set(rest[1:]))
     a, b = sys.argv[1], sys.argv[2]
     if os.path.exists(os.path.join(a, "oracle_sql.json")):
         out_dir, sf_dir = a, b
