@@ -395,14 +395,18 @@ object SparkEntry {
       .join(idMap(r), "docId").select("doc_id").orderBy("doc_id")
   }
 
+  /** (docId, score) hits as (rank, doc_id), ranked by (score desc, doc_id). */
+  private def ranked(r: SearchReader, hits: DataFrame): DataFrame =
+    hits.join(idMap(r), "docId")
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
+      .select("rank", "doc_id").orderBy("rank")
+
   /** Top-k of a BoolQ as (rank, doc_id) — rank by (score desc, doc_id). */
   private def rankedTopK(spark: SparkSession, sfDir: String, q: BoolQ,
                          k: Int): DataFrame = {
     val r = reader(spark, sfDir)
-    new JoinScorer(r).topK(q, k).join(idMap(r), "docId")
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-      .select("rank", "doc_id").orderBy("rank")
+    ranked(r, new JoinScorer(r).topK(q, k))
   }
 
   private def should(ts: String*): BoolQ =
@@ -575,11 +579,7 @@ object SparkEntry {
         ((if (df > cutoff) Occur.Should else Occur.Must): Occur,
           TermQ(t): Query)
       }
-      new JoinScorer(r).topK(BoolQ(clauses), 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r, new JoinScorer(r).topK(BoolQ(clauses), 15))
     }),
 
     /** Query-time synonym expansion (SynonymFilter analog): 'query' with
@@ -834,13 +834,9 @@ object SparkEntry {
 
     "ft_rescore" -> ((s, dir) => {
       val r = reader(s, dir)
-      new JoinScorer(r)
+      ranked(r, new JoinScorer(r)
         .rescore(should("spark", "vector", "window"), should("merge"),
-          40, 1f, 2f, 10)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+          40, 1f, 2f, 10))
     }),
 
     /** Solr ReRank (solr/core/.../search/ReRankQParserPlugin.java:98,
@@ -915,11 +911,7 @@ object SparkEntry {
 
     "ft_dismax" -> ((s, dir) => {
       val r = reader(s, dir)
-      new JoinScorer(r).topKDisMax(Seq("spark", "vector", "window"), 10)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r, new JoinScorer(r).topKDisMax(Seq("spark", "vector", "window"), 10))
     }),
 
     /** LM-Dirichlet similarity (mu=2000): rare term 'dup' scores high;
@@ -927,11 +919,9 @@ object SparkEntry {
       * match at score 0 and tie-break by doc_id. */
     "ft_lmdirichlet" -> ((s, dir) => {
       val r = reader(s, dir)
-      new LMDirichletScorer(r).topK(Seq("dup", "customer"), 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r, new SimilarityScorer(r, (_, ttf, _, collTokens, _) =>
+        Similarities.lmDirichlet(ttf, collTokens))
+        .topK(Seq("dup", "customer"), 15))
     }),
 
     /** German-light-stemmed search (UniNE; reference de/GermanAnalyzer):
@@ -1086,13 +1076,9 @@ object SparkEntry {
       * field's df/avgdl/norms), matching terms sum per doc. */
     "ft_edismax_qf" -> ((s, dir) => {
       val r = reader(s, dir)
-      new JoinScorer(r)
+      ranked(r, new JoinScorer(r)
         .topKEdismaxQf(Seq("spark", "000000123"),
-          Seq(("", 1f), ("path:", 2f)), tie = 0.3f, k = 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+          Seq(("", 1f), ("path:", 2f)), tie = 0.3f, k = 15))
     }),
 
     /** SpanMultiTermQueryWrapper: span-near with a PREFIX leg —
@@ -1114,11 +1100,7 @@ object SparkEntry {
       * still count them — reference live-docs semantics. */
     "ft_delete_search" -> ((s, dir) => {
       val (rDel, _) = deletedReaders(s, dir)
-      new JoinScorer(rDel).topK(QueryParser.parse("spark window"), 15)
-        .join(idMap(rDel), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(rDel, new JoinScorer(rDel).topK(QueryParser.parse("spark window"), 15))
     }),
 
     /** Search after compaction: tombstones purged, df/avgdl/maxDoc
@@ -1126,11 +1108,7 @@ object SparkEntry {
       * the scores legitimately shift). */
     "ft_compact_search" -> ((s, dir) => {
       val (_, rCpt) = deletedReaders(s, dir)
-      new JoinScorer(rCpt).topK(QueryParser.parse("spark window"), 15)
-        .join(idMap(rCpt), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(rCpt, new JoinScorer(rCpt).topK(QueryParser.parse("spark window"), 15))
     }),
 
     /** Atomic update, pre-compaction (updateDocument = delete-by-key +
@@ -1139,22 +1117,16 @@ object SparkEntry {
       * merge — reference pre-merge semantics. */
     "ft_update_search" -> ((s, dir) => {
       val (rUpd, _) = updatedReaders(s, dir)
-      new JoinScorer(rUpd).topK(QueryParser.parse("spark vectorized"), 15)
-        .join(idMap(rUpd), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(rUpd,
+        new JoinScorer(rUpd).topK(QueryParser.parse("spark vectorized"), 15))
     }),
 
     /** Same search after compaction: exactly the rewritten corpus, stats
       * over one doc per key. */
     "ft_update_compact" -> ((s, dir) => {
       val (_, rCpt) = updatedReaders(s, dir)
-      new JoinScorer(rCpt).topK(QueryParser.parse("spark vectorized"), 15)
-        .join(idMap(rCpt), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(rCpt,
+        new JoinScorer(rCpt).topK(QueryParser.parse("spark vectorized"), 15))
     }),
 
     /** Realtime get (Solr /get): newest live version of doc 123 by unique
@@ -1195,11 +1167,7 @@ object SparkEntry {
       val q = BoolQ(Seq(
         (Occur.Should, TermQ("spark")), (Occur.Should, TermQ("window")),
         (Occur.Should, PhraseQ(Seq("spark", "window"), Seq(0, 1)))))
-      new JoinScorer(r).topK(q, 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r, new JoinScorer(r).topK(q, 15))
     }),
 
     /** Term vectors WITH positions (TermVectorsFormat positions option):
@@ -1519,47 +1487,32 @@ object SparkEntry {
       * normalization. */
     "ft_dfr_gl2" -> ((s, dir) => {
       val r = reader(s, dir)
-      new SimilarityScorer(r, (df, ttf, maxDoc, _, avgdl) =>
+      ranked(r, new SimilarityScorer(r, (df, ttf, maxDoc, _, avgdl) =>
         Similarities.dfrGL2(df, ttf, maxDoc, avgdl))
-        .topK(Seq("dup", "spark"), 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+        .topK(Seq("dup", "spark"), 15))
     }),
 
     /** IB similarity (DistributionSPL + LambdaDF + NormalizationH2). */
     "ft_ib_spl" -> ((s, dir) => {
       val r = reader(s, dir)
-      new SimilarityScorer(r, (df, ttf, maxDoc, _, avgdl) =>
+      ranked(r, new SimilarityScorer(r, (df, ttf, maxDoc, _, avgdl) =>
         Similarities.ibSplDf(df, ttf, maxDoc, avgdl))
-        .topK(Seq("vector", "scan"), 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+        .topK(Seq("vector", "scan"), 15))
     }),
 
     /** LM with Jelinek-Mercer smoothing (lambda=0.7). */
     "ft_lmjm" -> ((s, dir) => {
       val r = reader(s, dir)
-      new SimilarityScorer(r, (_, ttf, _, collTokens, _) =>
+      ranked(r, new SimilarityScorer(r, (_, ttf, _, collTokens, _) =>
         Similarities.lmJelinekMercer(ttf, collTokens))
-        .topK(Seq("dup", "window"), 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+        .topK(Seq("dup", "window"), 15))
     }),
 
     /** DisMax with tieBreakerMultiplier: max + 0.3 x (sum of others). */
     "ft_dismax_tie" -> ((s, dir) => {
       val r = reader(s, dir)
-      new JoinScorer(r).topKDisMax(Seq("spark", "vector", "window"), 10, 0.3f)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r,
+        new JoinScorer(r).topKDisMax(Seq("spark", "vector", "window"), 10, 0.3f))
     }),
 
     /** Span difference (SpanNotQuery): 'scan' occurrences with no 'table'
@@ -1571,39 +1524,24 @@ object SparkEntry {
       * 5.2 DEFAULT similarity) ranking. */
     "ft_tfidf" -> ((s, dir) => {
       val r = reader(s, dir)
-      new ClassicScorer(r).topK(Seq("spark", "merge", "window"), 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r, new ClassicScorer(r).topK(Seq("spark", "merge", "window"), 15))
     }),
 
     "ft_wand_top20" -> ((s, dir) => {
       val r = reader(s, dir)
-      new WandScorer(r).topK(Seq("spark", "vector", "window"), 20)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r, new WandScorer(r).topK(Seq("spark", "vector", "window"), 20))
     }),
 
     "ft_wand_conj" -> ((s, dir) => {
       val r = reader(s, dir)
-      new WandScorer(r).topK(Seq("small", "value"), 10, conjunctive = true)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r,
+        new WandScorer(r).topK(Seq("small", "value"), 10, conjunctive = true))
     }),
 
     "ft_wand_msm2" -> ((s, dir) => {
       val r = reader(s, dir)
-      new WandScorer(r).topK(Seq("merge", "window", "stream"), 15,
-          minShouldMatch = 2)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r, new WandScorer(r).topK(Seq("merge", "window", "stream"), 15,
+          minShouldMatch = 2))
     }),
 
     /** NRT union view (base + 2 appended deltas) must rank identically to
@@ -2824,15 +2762,11 @@ object SparkEntry {
       * query time to the quantized dl from the stored norm byte. */
     "ft_sweetspot" -> ((s, dir) => {
       val r = reader(s, dir)
-      new ClassicScorer(r,
+      ranked(r, new ClassicScorer(r,
         tfFn = f => graft.search.SweetSpot.baselineTf(f, base = 1.0f, min = 2.0f),
         normFn = b => graft.search.SweetSpot.computeLengthNorm(
           graft.codec.SmallFloat.Bm25NormTable(b & 0xFF), min = 60, max = 100))
-        .topK(Seq("spark", "merge", "window"), 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+        .topK(Seq("spark", "merge", "window"), 15))
     }),
 
     /** Composite search handler (solr/.../component/SearchHandler.java —
@@ -5163,11 +5097,7 @@ object SparkEntry {
         (Occur.Should, PhraseQ(Seq("spark", "vector"), Seq(0, 1))),
         (Occur.Should, PhraseQ(Seq("vector", "window"), Seq(0, 1))),
         (Occur.Should, PhraseQ(Seq("spark", "vector", "window"), Seq(0, 1, 2)))))
-      new JoinScorer(r).topK(q, 15)
-        .join(idMap(r), "docId")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-        .select("rank", "doc_id").orderBy("rank")
+      ranked(r, new JoinScorer(r).topK(q, 15))
     }),
 
     /** stats.facet (StatsComponent per-facet-bucket statistics,

@@ -40,8 +40,8 @@ import scala.collection.mutable.ArrayBuffer
   * (WeightedSpanTermExtractor.getLeafContext); here the spans are walked
   * directly over the document's own token positions with the same
   * NearSpansOrdered greedy chain / NearSpansUnordered minimal-window
-  * semantics already used by the engine's span scorers
-  * (JoinScorer.orderedSpanFreq/unorderedSpanFreq, oracle-verified).
+  * walks the engine's span scorers use
+  * (JoinScorer.orderedSpanMatches/unorderedSpanMatches, oracle-verified).
   *
   * Fields are not modeled: engine queries are single-field, so the
   * extractor's fieldNameComparator filter is the identity here.
@@ -117,83 +117,19 @@ object ClassicHighlight {
       b.toArray
     }.toArray
 
-  /** NearSpansOrdered-style enumeration: for each occurrence of slot 0,
-    * chain each later slot greedily to its smallest position after the
-    * previous; emit the span when width - n <= slop (same walk as
-    * JoinScorer.orderedSpanFreq). */
-  private def orderedSpans(bySlot: Array[Array[Int]], slop: Int): Vector[PosSpan] = {
-    val n = bySlot.length
-    if (bySlot.exists(_.isEmpty)) return Vector.empty
-    val out = Vector.newBuilder[PosSpan]
-    val starts = bySlot(0)
-    var i = 0
-    while (i < starts.length) {
-      var prev = starts(i)
-      var ok = true
-      var j = 1
-      while (ok && j < n) {
-        val arr = bySlot(j)
-        val at = java.util.Arrays.binarySearch(arr, prev + 1)
-        val ins = if (at >= 0) at else -at - 1
-        if (ins >= arr.length) ok = false else prev = arr(ins)
-        j += 1
-      }
-      if (ok && (prev - starts(i) + 1) - n <= slop) out += PosSpan(starts(i), prev)
-      i += 1
-    }
-    out.result()
-  }
-
-  /** NearSpansUnordered-style enumeration: minimal covering windows over the
-    * merged per-slot position events (same two-pointer walk as
-    * JoinScorer.unorderedSpanFreq). */
-  private def unorderedSpans(bySlot: Array[Array[Int]], slop: Int): Vector[PosSpan] = {
-    val n = bySlot.length
-    if (bySlot.exists(_.isEmpty)) return Vector.empty
-    var total = 0
-    bySlot.foreach(a => total += a.length)
-    val pos = new Array[Int](total)
-    val cls = new Array[Int](total)
-    var o = 0
-    var t = 0
-    while (t < n) {
-      val a = bySlot(t)
-      var i = 0
-      while (i < a.length) { pos(o) = a(i); cls(o) = t; o += 1; i += 1 }
-      t += 1
-    }
-    val idx = (0 until total).sortBy(pos(_))
-    val counts = new Array[Int](n)
-    var covered = 0
-    val out = Vector.newBuilder[PosSpan]
-    var l = 0
-    var r = 0
-    while (r < total) {
-      val cr = cls(idx(r))
-      if (counts(cr) == 0) covered += 1
-      counts(cr) += 1
-      while (covered == n) {
-        val cl = cls(idx(l))
-        if (counts(cl) == 1) {
-          if ((pos(idx(r)) - pos(idx(l)) + 1) - n <= slop)
-            out += PosSpan(pos(idx(l)), pos(idx(r)))
-          covered -= 1
-        }
-        counts(cl) -= 1
-        l += 1
-      }
-      r += 1
-    }
-    out.result()
-  }
-
+  /** The span matches of one near query over the doc's tokens, from the
+    * engine's shared ordered / unordered span walks. */
   private def nearSpans(q: HSpanNear, tokens: IndexedSeq[Tok],
                         pos: Array[Int]): Vector[PosSpan] = {
     val bySlot = slotPositions(q.slots, tokens, pos)
     if (q.slots.length == 1)
       bySlot(0).toVector.map(p => PosSpan(p, p))
-    else if (q.inOrder) orderedSpans(bySlot, q.slop)
-    else unorderedSpans(bySlot, q.slop)
+    else if (q.inOrder)
+      JoinScorer.orderedSpanMatches(bySlot, q.slop)
+        .map(legs => PosSpan(legs.head, legs.last)).toVector
+    else
+      JoinScorer.unorderedSpanMatches(bySlot, q.slop)
+        .map { case (s, e) => PosSpan(s, e) }.toVector
   }
 
   // ------------------------------------------------------------- extraction

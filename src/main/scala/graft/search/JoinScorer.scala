@@ -58,7 +58,8 @@ final class JoinScorer(reader: SearchReader) {
       case (o, tq @ TermQ(t), b) =>
         (o, tq, ScoredTerm(t, stats.get(t), b))
       case (o, sq @ SpanNearQ(ts, slop, inOrder), b) =>
-        (o, sq, ScoredSpan(ts, slop, ts.map(stats.get), b, inOrder))
+        (o, sq, ScoredSpanNear(ts.map(Seq(_)), slop, inOrder,
+          ts.map(t => Seq(stats.get(t))), b))
       case (o, sq @ SpanNearMultiQ(legs, slop, inOrder), b) =>
         // SpanMultiTermQueryWrapper: expand each pattern leg against the
         // dictionary (TooManyClauses-guarded), then span-near over the
@@ -68,7 +69,7 @@ final class JoinScorer(reader: SearchReader) {
           val st = reader.termStats(ts)
           ts.map(st.get)
         }
-        (o, sq, ScoredSpanMulti(slots, slop, inOrder, slotStats, b))
+        (o, sq, ScoredSpanNear(slots, slop, inOrder, slotStats, b))
       case (o, sq @ SpanOrQ(ts), b) =>
         (o, sq, ScoredSpanOr(ts, ts.map(stats.get), b))
       case (o, sq @ SpanNotQ(inc, exc, pre, post), b) =>
@@ -175,17 +176,15 @@ final class JoinScorer(reader: SearchReader) {
   final case class ScoredMultiPhrase(slots: Seq[Seq[String]], rel: Seq[Int],
                                      stats: Seq[Seq[Option[TermStats]]],
                                      boost: Float = 1f) extends RewrittenClause
-  final case class ScoredSpan(terms: Seq[String], slop: Int,
-                              stats: Seq[Option[TermStats]],
-                              boost: Float = 1f,
-                              inOrder: Boolean = true) extends RewrittenClause
   final case class ScoredSpanOr(terms: Seq[String],
                                 stats: Seq[Option[TermStats]],
                                 boost: Float = 1f) extends RewrittenClause
-  final case class ScoredSpanMulti(slots: Seq[Seq[String]], slop: Int,
-                                   inOrder: Boolean,
-                                   stats: Seq[Seq[Option[TermStats]]],
-                                   boost: Float = 1f) extends RewrittenClause
+  /** Span-near over slots: one term per slot for SpanNearQ, a leg's
+    * dictionary expansion per slot for SpanNearMultiQ. */
+  final case class ScoredSpanNear(slots: Seq[Seq[String]], slop: Int,
+                                  inOrder: Boolean,
+                                  stats: Seq[Seq[Option[TermStats]]],
+                                  boost: Float = 1f) extends RewrittenClause
   final case class ScoredSpanNot(include: String, exclude: String,
                                  pre: Int, post: Int,
                                  incStats: Option[TermStats],
@@ -282,68 +281,76 @@ final class JoinScorer(reader: SearchReader) {
     }.dropDuplicates("docId").as[ClauseHit]
   }
 
-  /** Exact-phrase hits: two-phase — conjunction on docIds, then position
-    * alignment (reference search/ExactPhraseScorer.java:27-84; the
-    * approximate-then-verify split of TwoPhaseIterator.java:24-35).
-    * Score = (sum of term idfs) * (k1+1) * pf/(pf+norm). */
+  /** Weight of a clause that blends its present terms' statistics: the
+    * float sum of their idfs, in order, times boost (the summed-idf rule of
+    * PhraseWeight, SpanWeight and TermAutomatonWeight). */
+  private def summedWeight(stats: Seq[Option[TermStats]], boost: Float): Float = {
+    var idfSum = 0f
+    stats.flatten.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
+    BM25.weightValue(idfSum, boost)
+  }
+
+  /** term -> the slots it fills (a term may fill several: "a b a"). */
+  private def slotsOf(slots: Seq[Seq[String]]): Map[String, Seq[Int]] =
+    slots.zipWithIndex.flatMap { case (ts, i) => ts.map(_ -> i) }
+      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
+
+  /** The positional-clause kernel behind every phrase, span and automaton
+    * clause: one bucket-pruned postings pass over `termSlots`' terms, ONE
+    * groupByKey(docId), and per doc the slot position lists (a slot's
+    * terms merge into one sorted list; null = no term of the slot in the
+    * doc). Docs missing one of the first `nRequired` slots never match;
+    * otherwise `freq` of the lists (0 = no match) is scored with BM25
+    * against `normField`'s norms (the two-phase approximate-then-verify
+    * split of TwoPhaseIterator.java:24-35). */
+  private def positionalHits(termSlots: Map[String, Seq[Int]], nSlots: Int,
+                             nRequired: Int, wv: Float, normField: String,
+                             clause: Int, kind: Int)
+                            (freq: Array[Array[Int]] => Float): Dataset[ClauseHit] = {
+    val cacheB = spark.sparkContext.broadcast(reader.normCacheFor(normField))
+    val slotsB = spark.sparkContext.broadcast(termSlots)
+    reader.blocks(termSlots.keys.toSeq).flatMap { b =>
+      val slots = slotsB.value(b.term)
+      val inField = IndexBuilder.fieldOfTerm(b.term) == normField
+      PostingsCodec.decode(b.block).iterator.flatMap(p =>
+        slots.map(s => (p.docId, s, p.positions, p.norm, inField)))
+    }.groupByKey(_._1).flatMapGroups { (docId, it) =>
+      val bySlot = new Array[Array[Int]](nSlots)
+      var norm: Byte = 0
+      it.foreach { case (_, s, pos, n, inField) =>
+        bySlot(s) =
+          if (bySlot(s) == null) pos else JoinScorer.mergeSorted(bySlot(s), pos)
+        if (inField) norm = n
+      }
+      val f =
+        if ((0 until nRequired).exists(bySlot(_) == null)) 0f else freq(bySlot)
+      if (f == 0f) Iterator.empty
+      else Iterator.single(ClauseHit(docId, clause, kind,
+        BM25.score(wv, f, cacheB.value, norm)))
+    }
+  }
+
+  /** Exact and sloppy phrase hits. Exact: freq = first-term positions where
+    * every term aligns at its rel offset (search/ExactPhraseScorer.java:
+    * 27-84). Sloppy: the reference pq-walk over adjusted cursors, freq =
+    * sum of 1/(1+matchLength) over encountered matches
+    * (search/SloppyPhraseScorer.java:96-135 via SloppyMatch).
+    * Score = (sum of term idfs) * (k1+1) * freq/(freq+norm). */
   private def phraseHits(terms: Seq[String], rel: Seq[Int],
                          stats: Seq[Option[TermStats]], clause: Int,
                          kind: Int, slop: Int = 0,
                          boost: Float = 1f): Dataset[ClauseHit] = {
     if (stats.exists(_.isEmpty) || terms.isEmpty) return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
     val relArr = rel.toArray
-    val nTerms = terms.length
-    // a term can occur at several phrase slots ("a b a")
-    val termIdx: Map[String, Seq[Int]] =
-      terms.zipWithIndex.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
+    val termSlots = slotsOf(terms.map(Seq(_)))
     val rptSlots: Array[Array[Int]] =
-      termIdx.valuesIterator.filter(_.length > 1).map(_.toArray).toArray
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(terms.head)))
-    val tIdxB = spark.sparkContext.broadcast(termIdx)
-    val rows: Dataset[(Long, Int, Array[Int], Byte)] =
-      reader.blocks(terms.distinct).flatMap { b =>
-        val idxs = tIdxB.value(b.term)
-        PostingsCodec.decode(b.block).iterator.flatMap(p =>
-          idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-      }
-    rows.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byTerm = new Array[Array[Int]](nTerms)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => byTerm(i) = pos; norm = n }
-      if (byTerm.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else if (slop > 0) {
-        // sloppy: the reference pq-walk over adjusted cursors — freq is
-        // the sum of 1/(1+matchLength) over encountered matches
-        // (search/SloppyPhraseScorer.java:96-135 via SloppyMatch)
-        val f = SloppyMatch.freq(byTerm, relArr, slop, rptSlots)
-        if (f == 0f) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, f, cacheB.value, norm))
-      } else {
-        // count first-term positions where every term aligns at rel offset
-        var pf = 0
-        val base = byTerm(0)
-        var i = 0
-        while (i < base.length) {
-          val p0 = base(i) - relArr(0)
-          var ok = true
-          var j = 1
-          while (ok && j < nTerms) {
-            ok = java.util.Arrays.binarySearch(byTerm(j), p0 + relArr(j)) >= 0
-            j += 1
-          }
-          if (ok) pf += 1
-          i += 1
-        }
-        if (pf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, pf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+      termSlots.valuesIterator.filter(_.length > 1).map(_.toArray).toArray
+    positionalHits(termSlots, terms.length, terms.length,
+      summedWeight(stats, boost), IndexBuilder.fieldOfTerm(terms.head),
+      clause, kind) { bySlot =>
+      if (slop > 0) SloppyMatch.freq(bySlot, relArr, slop, rptSlots)
+      else JoinScorer.exactPhraseFreq(bySlot, relArr).toFloat
+    }
   }
 
   /** Multi-phrase hits (reference search/MultiPhraseQuery.java +
@@ -358,54 +365,11 @@ final class JoinScorer(reader: SearchReader) {
     // a slot with no indexed alternative can never align -> no matches
     if (slots.isEmpty || stats.exists(_.forall(_.isEmpty)))
       return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.flatten.foreach(ts =>
-      idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
     val relArr = rel.toArray
-    val nSlots = slots.length
-    // a term may serve several slots ("(a b) (b c)")
-    val termSlots: Map[String, Seq[Int]] =
-      slots.zipWithIndex.flatMap { case (sl, i) => sl.map(_ -> i) }
-        .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(slots.head.head)))
-    val tIdxB = spark.sparkContext.broadcast(termSlots)
-    reader.blocks(slots.flatten.distinct).flatMap { b =>
-      val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(b.block).iterator.flatMap(p =>
-        idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val bySlot = Array.fill(nSlots)(List.empty[Array[Int]])
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => bySlot(i) ::= pos; norm = n }
-      if (bySlot.exists(_.isEmpty)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        // union alternatives per slot (positions are disjoint across
-        // alternatives: one token per position)
-        val merged = bySlot.map { ls =>
-          val a = ls.toArray.flatten
-          java.util.Arrays.sort(a); a
-        }
-        var pf = 0
-        val base = merged(0)
-        var i = 0
-        while (i < base.length) {
-          val p0 = base(i) - relArr(0)
-          var ok = true
-          var j = 1
-          while (ok && j < nSlots) {
-            ok = java.util.Arrays.binarySearch(merged(j), p0 + relArr(j)) >= 0
-            j += 1
-          }
-          if (ok) pf += 1
-          i += 1
-        }
-        if (pf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, pf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+    positionalHits(slotsOf(slots), slots.length, slots.length,
+      summedWeight(stats.flatten, boost),
+      IndexBuilder.fieldOfTerm(slots.head.head), clause, kind)(
+      JoinScorer.exactPhraseFreq(_, relArr).toFloat)
   }
 
   /** Term-automaton hits (reference sandbox TermAutomatonQuery/Scorer):
@@ -421,78 +385,27 @@ final class JoinScorer(reader: SearchReader) {
     val dfa = TermAutomatonDfa.compile(taq)
     if (dfa.terms.isEmpty || stats.forall(_.isEmpty))
       return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts =>
-      idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(dfa.terms.head)))
     val dfaB = spark.sparkContext.broadcast(dfa)
-    val tIdxB = spark.sparkContext.broadcast(dfa.terms.zipWithIndex.toMap)
-    reader.blocks(dfa.terms.toSeq).flatMap { b =>
-      val tid = tIdxB.value(b.term)
-      PostingsCodec.decode(b.block).iterator
-        .map(p => (p.docId, tid, p.positions, p.norm))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
+    positionalHits(slotsOf(dfa.terms.toSeq.map(Seq(_))), dfa.terms.length, 0,
+      summedWeight(stats, boost), IndexBuilder.fieldOfTerm(dfa.terms.head),
+      clause, kind) { bySlot =>
+      // (position, termId) token stream in position order
       val pairs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-      var norm: Byte = 0
-      it.foreach { case (_, tid, pos, n) =>
-        pos.foreach(p => pairs += ((p, tid))); norm = n }
-      val freq = TermAutomatonDfa.countMatches(dfaB.value,
-        pairs.sortInPlaceBy(x => (x._1, x._2)).toSeq)
-      if (freq == 0) ClauseHit(docId, clause, kind, Float.NaN)
-      else ClauseHit(docId, clause, kind,
-        BM25.score(wv, freq.toFloat, cacheB.value, norm))
-    }.filter(h => !java.lang.Float.isNaN(h.score))
-  }
-
-  /** Ordered span-near hits (reference spans/SpanNearQuery.java,
-    * inOrder=true): for each start occurrence of the first term, greedily
-    * chain each next term to its smallest position after the previous;
-    * match when spanWidth - nTerms <= slop (greedy minimizes the end, so
-    * membership is exact). freq = number of matching start positions. */
-  private def spanHits(terms: Seq[String], slop: Int,
-                       stats: Seq[Option[TermStats]], clause: Int,
-                       kind: Int, boost: Float,
-                       inOrder: Boolean = true): Dataset[ClauseHit] = {
-    if (stats.exists(_.isEmpty) || terms.isEmpty) return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val nTerms = terms.length
-    val termIdx: Map[String, Seq[Int]] =
-      terms.zipWithIndex.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(terms.head)))
-    val tIdxB = spark.sparkContext.broadcast(termIdx)
-    reader.blocks(terms.distinct).flatMap { b =>
-      val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(b.block).iterator.flatMap(p =>
-        idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byTerm = new Array[Array[Int]](nTerms)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => byTerm(i) = pos; norm = n }
-      if (byTerm.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        val sf =
-          if (inOrder) JoinScorer.orderedSpanFreq(byTerm, nTerms, slop)
-          else JoinScorer.unorderedSpanFreq(byTerm, nTerms, slop)
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+      for (tid <- bySlot.indices if bySlot(tid) != null; p <- bySlot(tid))
+        pairs += ((p, tid))
+      TermAutomatonDfa.countMatches(dfaB.value,
+        pairs.sortInPlaceBy(x => (x._1, x._2)).toSeq).toFloat
+    }
   }
 
   /** Payload-check spans (SpanPayloadCheckQuery / SpanNearPayloadCheckQuery):
-    * ordered greedy span walk as in spanHits, but each match's leg
-    * positions are surfaced and its payloads (the position-derived channel
-    * shared with ft_payload: 2.0 inside the 20-token lead window, 1.0
-    * after) are compared against `expected` — in order for the single-span
-    * check (SpanPayloadCheckQuery.java:52-73), by match-any counting for
-    * the near variant (SpanNearPayloadCheckQuery.java:47-76). freq =
-    * accepted matches, scored with the summed-idf statistics. */
+    * the ordered span walk, with each match's leg payloads (the
+    * position-derived channel shared with ft_payload: 2.0 inside the
+    * 20-token lead window, 1.0 after) compared against `expected` — in
+    * order for the single-span check (SpanPayloadCheckQuery.java:52-73),
+    * by match-any counting for the near variant
+    * (SpanNearPayloadCheckQuery.java:47-76). freq = accepted matches,
+    * scored with the summed-idf statistics. */
   private def spanPayloadCheckHits(terms: Seq[String], slop: Int,
                                    expected: Seq[Float], nearRule: Boolean,
                                    stats: Seq[Option[TermStats]],
@@ -500,93 +413,42 @@ final class JoinScorer(reader: SearchReader) {
                                    boost: Float): Dataset[ClauseHit] = {
     if (stats.exists(_.isEmpty) || terms.isEmpty)
       return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val nTerms = terms.length
     val exp = expected.toArray
-    val termIdx: Map[String, Seq[Int]] =
-      terms.zipWithIndex.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(terms.head)))
-    val tIdxB = spark.sparkContext.broadcast(termIdx)
-    reader.blocks(terms.distinct).flatMap { b =>
-      val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(b.block).iterator.flatMap(p =>
-        idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byTerm = new Array[Array[Int]](nTerms)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => byTerm(i) = pos; norm = n }
-      if (byTerm.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        var sf = 0
-        JoinScorer.orderedSpanMatches(byTerm, nTerms, slop).foreach { legs =>
-          val cand = legs.map(JoinScorer.leadPayload)
-          val ok =
-            if (cand.length != exp.length) false
-            else if (!nearRule) cand.indices.forall(i => cand(i) == exp(i))
-            else cand.count(c => exp.contains(c)) == exp.length
-          if (ok) sf += 1
-        }
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+    positionalHits(slotsOf(terms.map(Seq(_))), terms.length, terms.length,
+      summedWeight(stats, boost), IndexBuilder.fieldOfTerm(terms.head),
+      clause, kind) { bySlot =>
+      JoinScorer.orderedSpanMatches(bySlot, slop).count { legs =>
+        val cand = legs.map(JoinScorer.leadPayload)
+        cand.length == exp.length &&
+          (if (nearRule) cand.count(c => exp.contains(c)) == exp.length
+          else cand.indices.forall(i => cand(i) == exp(i)))
+      }.toFloat
+    }
   }
 
-  /** Span-near over multi-term slots (SpanMultiTermQueryWrapper inside
-    * SpanNearQuery): a slot's occurrence set is the sorted UNION of its
-    * expanded terms' positions; the near algorithm then runs exactly as
-    * for plain term legs. Blended statistics: idf sums over every matched
-    * term of every slot (SpanOrQuery's UnionPostings posture). */
-  private def spanNearMultiHits(slots: Seq[Seq[String]], slop: Int,
-                                inOrder: Boolean,
-                                stats: Seq[Seq[Option[TermStats]]],
-                                clause: Int, kind: Int,
-                                boost: Float): Dataset[ClauseHit] = {
+  /** Span-near (reference spans/SpanNearQuery.java), over plain term legs
+    * or multi-term slots (SpanMultiTermQueryWrapper inside SpanNearQuery):
+    * a slot's occurrence set is the sorted UNION of its terms' positions;
+    * freq = the number of ordered or unordered span matches. Blended
+    * statistics: idf sums over every matched term of every slot
+    * (SpanOrQuery's UnionPostings posture). */
+  private def spanNearHits(slots: Seq[Seq[String]], slop: Int,
+                           inOrder: Boolean,
+                           stats: Seq[Seq[Option[TermStats]]],
+                           clause: Int, kind: Int,
+                           boost: Float): Dataset[ClauseHit] = {
     val presentSlots: Seq[Seq[String]] = slots.zip(stats).map { case (ts, st) =>
-      ts.zip(st).collect { case (t, Some(_)) => t }
+      ts.zip(st).collect { case (t, Some(_)) => t }.distinct
     }
     // a slot with no dictionary match can never occur -> no clause hits
     if (slots.isEmpty || presentSlots.exists(_.isEmpty))
       return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.flatten.foreach(ts =>
-      idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val nSlots = presentSlots.length
-    val termSlots: Map[String, Seq[Int]] = presentSlots.zipWithIndex
-      .flatMap { case (ts, i) => ts.map(_ -> i) }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct }
-    val allTerms = termSlots.keys.toSeq
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(allTerms.head)))
-    val tIdxB = spark.sparkContext.broadcast(termSlots)
-    reader.blocks(allTerms).flatMap { b =>
-      val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(b.block).iterator.flatMap(p =>
-        idxs.map(i => (p.docId, i, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val bySlot = new Array[Array[Int]](nSlots)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) =>
-        norm = n
-        bySlot(i) =
-          if (bySlot(i) == null) pos
-          else JoinScorer.mergeSorted(bySlot(i), pos)
-      }
-      if (bySlot.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        val sf =
-          if (inOrder) JoinScorer.orderedSpanFreq(bySlot, nSlots, slop)
-          else JoinScorer.unorderedSpanFreq(bySlot, nSlots, slop)
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+    positionalHits(slotsOf(presentSlots), slots.length, slots.length,
+      summedWeight(stats.flatten, boost),
+      IndexBuilder.fieldOfTerm(presentSlots.head.head), clause, kind) { bySlot =>
+      (if (inOrder) JoinScorer.orderedSpanMatches(bySlot, slop)
+      else JoinScorer.unorderedSpanMatches(bySlot, slop)).size.toFloat
+    }
   }
 
   /** Span disjunction over terms (SpanOrQuery analog): freq = total
@@ -621,51 +483,30 @@ final class JoinScorer(reader: SearchReader) {
                           excPresent: Boolean, clause: Int, kind: Int,
                           boost: Float): Dataset[ClauseHit] = {
     if (incStats.isEmpty) return spark.emptyDataset[ClauseHit]
-    val wv = BM25.weightValue(
-      BM25.idf(incStats.get.df, reader.collStats.maxDoc), boost)
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(include)))
-    val inc = include
-    val terms = if (excPresent) Seq(include, exclude) else Seq(include)
-    reader.blocks(terms.distinct).flatMap { b =>
-      val isInc = b.term == inc
-      PostingsCodec.decode(b.block).iterator
-        .map(p => (p.docId, isInc, p.positions, p.norm))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      var incPos: Array[Int] = null
-      var excPos: Array[Int] = null
-      var norm: Byte = 0
-      it.foreach { case (_, isInc, pos, n) =>
-        if (isInc) { incPos = pos; norm = n } else excPos = pos
-      }
-      if (incPos == null) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        var sf = 0
-        var i = 0
-        while (i < incPos.length) {
-          val p = incPos(i)
-          var blocked = false
-          if (excPos != null) {
-            // first exclude >= p - pre; blocked when it is <= p + post
-            val at = java.util.Arrays.binarySearch(excPos, p - pre)
-            val ins = if (at >= 0) at else -at - 1
-            blocked = ins < excPos.length && excPos(ins) <= p + post
-          }
-          if (!blocked) sf += 1
-          i += 1
+    // slot 0 = include (required), slot 1 = exclude (optional); an
+    // exclude equal to the include term fills the include slot only
+    val termSlots =
+      (if (excPresent) Map(exclude -> Seq(1)) else Map.empty[String, Seq[Int]]) +
+        (include -> Seq(0))
+    positionalHits(termSlots, 2, 1, summedWeight(Seq(incStats), boost),
+      IndexBuilder.fieldOfTerm(include), clause, kind) { bySlot =>
+      val excPos = bySlot(1)
+      bySlot(0).count { p =>
+        // survives unless the first exclude >= p - pre is <= p + post
+        excPos == null || {
+          val at = java.util.Arrays.binarySearch(excPos, p - pre)
+          val ins = if (at >= 0) at else -at - 1
+          ins >= excPos.length || excPos(ins) > p + post
         }
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+      }.toFloat
+    }
   }
 
   /** Span-within / span-containing (reference search/spans/
     * SpanWithinQuery.java, SpanContainingQuery.java — both new in the
-    * 5.2 reference): ordered `big` spans are enumerated greedily
-    * (minimal end per start, as NearSpansOrdered does); `within` counts
-    * little occurrences inside some big span (scored with little's idf),
+    * 5.2 reference): `big` spans come from the ordered span walk (minimal
+    * end per start, as NearSpansOrdered does); `within` counts little
+    * occurrences inside some big span (scored with little's idf),
     * `containing` counts big spans holding at least one little
     * occurrence (scored with the big terms' summed idf). */
   private def spanContainHits(little: String, big: Seq[String], slop: Int,
@@ -676,73 +517,22 @@ final class JoinScorer(reader: SearchReader) {
                               boost: Float): Dataset[ClauseHit] = {
     if (littleStats.isEmpty || bigStats.exists(_.isEmpty) || big.isEmpty)
       return spark.emptyDataset[ClauseHit]
-    var idf = 0f
-    if (within) idf = BM25.idf(littleStats.get.df, reader.collStats.maxDoc)
-    else bigStats.flatten.foreach(ts =>
-      idf += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idf, boost)
     val nBig = big.length
-    val isWithin = within
-    val slp = slop
-    // roles: 0..nBig-1 = big slots, nBig = little (a term may fill both)
-    val roleIdx: Map[String, Seq[Int]] =
-      (big.zipWithIndex ++ Seq(little -> nBig))
-        .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(little)))
-    val rIdxB = spark.sparkContext.broadcast(roleIdx)
-    reader.blocks((big :+ little).distinct).flatMap { b =>
-      val idxs = rIdxB.value(b.term)
-      PostingsCodec.decode(b.block).iterator.flatMap(p =>
-        idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byRole = new Array[Array[Int]](nBig + 1)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => byRole(i) = pos; norm = n }
-      if (byRole.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        // greedy ordered big spans: minimal end per start position
-        val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-        val starts = byRole(0)
-        var i = 0
-        while (i < starts.length) {
-          var prev = starts(i)
-          var ok = true
-          var j = 1
-          while (ok && j < nBig) {
-            val arr = byRole(j)
-            val at = java.util.Arrays.binarySearch(arr, prev + 1)
-            val ins = if (at >= 0) at else -at - 1
-            if (ins >= arr.length) ok = false else prev = arr(ins)
-            j += 1
-          }
-          if (ok && (prev - starts(i) + 1) - nBig <= slp)
-            spans += ((starts(i), prev))
-          i += 1
-        }
-        val lp = byRole(nBig)
-        var sf = 0
-        if (isWithin) {
-          // little occurrences inside ANY big span (each counted once)
-          var k = 0
-          while (k < lp.length) {
-            val p = lp(k)
-            if (spans.exists(se => se._1 <= p && p <= se._2)) sf += 1
-            k += 1
-          }
-        } else {
-          // big spans containing at least one little occurrence
-          spans.foreach { case (s, e) =>
-            val at = java.util.Arrays.binarySearch(lp, s)
-            val ins = if (at >= 0) at else -at - 1
-            if (ins < lp.length && lp(ins) <= e) sf += 1
-          }
-        }
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+    // slots 0..nBig-1 = big legs, nBig = little (a term may fill both)
+    positionalHits(slotsOf(big.map(Seq(_)) :+ Seq(little)), nBig + 1, nBig + 1,
+      summedWeight(if (within) Seq(littleStats) else bigStats, boost),
+      IndexBuilder.fieldOfTerm(little), clause, kind) { bySlot =>
+      val lp = bySlot(nBig)
+      val spans = JoinScorer.orderedSpanMatches(bySlot.take(nBig), slop)
+        .map(legs => (legs(0), legs(nBig - 1))).toArray
+      (if (within) // little occurrences inside ANY big span (each counted once)
+        lp.count(p => spans.exists(se => se._1 <= p && p <= se._2))
+      else spans.count { case (s, e) => // big spans holding a little occurrence
+        val at = java.util.Arrays.binarySearch(lp, s)
+        val ins = if (at >= 0) at else -at - 1
+        ins < lp.length && lp(ins) <= e
+      }).toFloat
+    }
   }
 
   /** Span position range (SpanPositionRangeQuery; SpanFirstQuery is
@@ -813,10 +603,8 @@ final class JoinScorer(reader: SearchReader) {
           multiPhraseHits(ss, rel, st, i, kind, b)
         case ScoredAutomaton(tq, st, b) =>
           termAutomatonHits(tq, st, i, kind, b)
-        case ScoredSpan(ts, slop, st, b, ord) =>
-          spanHits(ts, slop, st, i, kind, b, ord)
-        case ScoredSpanMulti(ss, slop, ord, st, b) =>
-          spanNearMultiHits(ss, slop, ord, st, i, kind, b)
+        case ScoredSpanNear(ss, slop, ord, st, b) =>
+          spanNearHits(ss, slop, ord, st, i, kind, b)
         case ScoredSpanOr(ts, st, b) => spanOrHits(ts, st, i, kind, b)
         case ScoredSpanNot(inc, exc, pre, post, st, ep, b) =>
           spanNotHits(inc, exc, pre, post, st, ep, i, kind, b)
@@ -1024,80 +812,76 @@ object JoinScorer {
     out
   }
 
-  /** Ordered span-near freq (NearSpansOrdered analog): for each start
-    * occurrence of the first term, greedily chain each next term to its
-    * smallest position after the previous; match when
-    * spanWidth - nTerms <= slop (greedy minimizes the end, so membership
-    * is exact). */
   /** The fixed position-derived payload channel shared by ft_payload and
     * the payload-check queries: 2.0 inside the 20-token lead window, 1.0
     * after (TokenOffsetPayloadTokenFilter-style analysis product). */
   def leadPayload(pos: Int): Float = if (pos < 20) 2f else 1f
 
-  /** Ordered greedy span walk (same chain as orderedSpanFreq) that yields
-    * each MATCHING span's per-leg positions — for accept-position checks
-    * that must see the matched occurrences, not just the count. */
-  def orderedSpanMatches(byTerm: Array[Array[Int]], nTerms: Int,
-                         slop: Int): Iterator[Array[Int]] = {
-    val starts = byTerm(0)
-    (0 until starts.length).iterator.flatMap { i =>
-      val legs = new Array[Int](nTerms)
-      legs(0) = starts(i)
-      var prev = starts(i)
+  /** Exact-phrase freq: slot-0 positions where every slot aligns at its
+    * rel offset (ExactPhraseScorer's position alignment). */
+  private def exactPhraseFreq(bySlot: Array[Array[Int]], rel: Array[Int]): Int = {
+    var pf = 0
+    val base = bySlot(0)
+    var i = 0
+    while (i < base.length) {
+      val p0 = base(i) - rel(0)
       var ok = true
       var j = 1
-      while (ok && j < nTerms) {
-        val arr = byTerm(j)
+      while (ok && j < bySlot.length) {
+        ok = java.util.Arrays.binarySearch(bySlot(j), p0 + rel(j)) >= 0
+        j += 1
+      }
+      if (ok) pf += 1
+      i += 1
+    }
+    pf
+  }
+
+  /** The ordered span walk (NearSpansOrdered analog): for each start
+    * occurrence of slot 0, greedily chain each next slot to its smallest
+    * position after the previous; yields each MATCHING span's per-slot
+    * positions, a match when spanWidth - nSlots <= slop (greedy minimizes
+    * the end, so membership is exact). Span freq = the number of matches. */
+  def orderedSpanMatches(bySlot: Array[Array[Int]],
+                         slop: Int): Iterator[Array[Int]] = {
+    val n = bySlot.length
+    bySlot(0).iterator.flatMap { start =>
+      val legs = new Array[Int](n)
+      legs(0) = start
+      var prev = start
+      var ok = true
+      var j = 1
+      while (ok && j < n) {
+        val arr = bySlot(j)
         val at = java.util.Arrays.binarySearch(arr, prev + 1)
         val ins = if (at >= 0) at else -at - 1
         if (ins >= arr.length) ok = false else { prev = arr(ins); legs(j) = prev }
         j += 1
       }
-      if (ok && (prev - legs(0) + 1) - nTerms <= slop) Iterator.single(legs)
+      if (ok && (prev - start + 1) - n <= slop) Iterator.single(legs)
       else Iterator.empty
     }
   }
 
-  def orderedSpanFreq(byTerm: Array[Array[Int]],
-                                      nTerms: Int, slop: Int): Int = {
-    var sf = 0
-    val starts = byTerm(0)
-    var i = 0
-    while (i < starts.length) {
-      var prev = starts(i)
-      var ok = true
-      var j = 1
-      while (ok && j < nTerms) {
-        val arr = byTerm(j)
-        val at = java.util.Arrays.binarySearch(arr, prev + 1)
-        val ins = if (at >= 0) at else -at - 1
-        if (ins >= arr.length) ok = false else prev = arr(ins)
-        j += 1
-      }
-      if (ok && (prev - starts(i) + 1) - nTerms <= slop) sf += 1
-      i += 1
-    }
-    sf
-  }
-
-  /** Unordered span-near freq (NearSpansUnordered analog): merge every
-    * term's positions into one sorted event list and slide a two-pointer
-    * window; each time the window covers all terms, shrink from the left
-    * to the MINIMAL covering window and count it when
-    * width - nTerms <= slop. Counts distinct minimal windows (each left
+  /** The unordered span walk (NearSpansUnordered analog): merge every
+    * slot's positions into one sorted event list and slide a two-pointer
+    * window; each time the window covers all slots, shrink from the left
+    * to the MINIMAL covering window and yield its (start, end) when
+    * width - nSlots <= slop. Yields distinct minimal windows (each left
     * edge at most once), mirroring the queue-based minimal-interval
-    * matching of the reference. */
-  def unorderedSpanFreq(byTerm: Array[Array[Int]],
-                                        nTerms: Int, slop: Int): Int = {
+    * matching of the reference. Span freq = the number of matches. */
+  def unorderedSpanMatches(bySlot: Array[Array[Int]],
+                           slop: Int): Iterator[(Int, Int)] = {
+    val n = bySlot.length
     var total = 0
-    byTerm.foreach(a => total += a.length)
+    bySlot.foreach(a => total += a.length)
     val pos = new Array[Int](total)
     val cls = new Array[Int](total)
     // k-way merge by simple fill + sort (position lists are tiny per doc)
     var o = 0
     var t = 0
-    while (t < nTerms) {
-      val a = byTerm(t)
+    while (t < n) {
+      val a = bySlot(t)
       var i = 0
       while (i < a.length) { pos(o) = a(i); cls(o) = t; o += 1; i += 1 }
       t += 1
@@ -1105,20 +889,21 @@ object JoinScorer {
     // sort events by position (insertion indices differ => stable enough;
     // positions are unique within a doc, one token per position)
     val idx = (0 until total).sortBy(pos(_))
-    val counts = new Array[Int](nTerms)
+    val counts = new Array[Int](n)
     var covered = 0
-    var sf = 0
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     var l = 0
     var r = 0
     while (r < total) {
       val cr = cls(idx(r))
       if (counts(cr) == 0) covered += 1
       counts(cr) += 1
-      while (covered == nTerms) {
+      while (covered == n) {
         val cl = cls(idx(l))
         if (counts(cl) == 1) {
           // minimal window [l, r]
-          if ((pos(idx(r)) - pos(idx(l)) + 1) - nTerms <= slop) sf += 1
+          if ((pos(idx(r)) - pos(idx(l)) + 1) - n <= slop)
+            out += ((pos(idx(l)), pos(idx(r))))
           covered -= 1
         }
         counts(cl) -= 1
@@ -1126,6 +911,6 @@ object JoinScorer {
       }
       r += 1
     }
-    sf
+    out.iterator
   }
 }

@@ -14,8 +14,9 @@ import graft.index.SearchReader
   *  - IB SPL-D = IBSimilarity(DistributionSPL, LambdaDF, NormalizationH2)
   *    (IBSimilarity.java:78-86; Clinchant & Gaussier, SIGIR 2010)
   *  - LM Jelinek-Mercer (LMJelinekMercerSimilarity.java:55-62)
+  *  - LM Dirichlet (LMDirichletSimilarity.java:56-66)
   *
-  * All three consume (tf, quantized dl) per posting plus per-clause
+  * All four consume (tf, quantized dl) per posting plus per-clause
   * collection stats — exactly the SimilarityBase contract (score(stats,
   * freq, docLen) with docLen the byte315-decoded norm). Clause scores sum
   * in clause order (BooleanQuery disjunction), ties break by docId.
@@ -66,6 +67,20 @@ object Similarities {
     val p = (ttf + 1.0f) / (collTokens + 1.0f)
     (tf: Int, dl: Float) =>
       math.log(1.0 + ((1 - lambda) * tf / dl) / (lambda * p)).toFloat
+  }
+
+  /** LM Dirichlet smoothing, mu = 2000 (LMDirichletSimilarity.java:56-66):
+    * s = log(1 + tf/(mu*P(t|C))) + log(mu/(dl + mu)), clamped >= 0, so a
+    * doc whose every clause clamps still matches with score 0;
+    * P(t|C) = (ttf+1)/(collTokens+1) (LMSimilarity.java:80-84). */
+  def lmDirichlet(ttf: Long, collTokens: Long): ClauseScore = {
+    val mu = 2000f
+    val muP = mu * ((ttf + 1f) / (collTokens + 1f))
+    (tf: Int, dl: Float) => {
+      val s = (math.log(1.0 + tf / muP.toDouble) +
+        math.log(mu / (dl + mu).toDouble)).toFloat
+      if (s > 0f) s else 0f
+    }
   }
 }
 

@@ -13,9 +13,9 @@ import graft.search._
 class FieldedSpanSpec extends AnyFunSuite {
 
   private def freqU(slop: Int, lists: Array[Int]*): Int =
-    JoinScorer.unorderedSpanFreq(lists.toArray, lists.length, slop)
+    JoinScorer.unorderedSpanMatches(lists.toArray, slop).size
   private def freqO(slop: Int, lists: Array[Int]*): Int =
-    JoinScorer.orderedSpanFreq(lists.toArray, lists.length, slop)
+    JoinScorer.orderedSpanMatches(lists.toArray, slop).size
 
   test("unordered span freq: any order within window") {
     // "b a": ordered (a then b) fails at slop 0, unordered matches

@@ -151,7 +151,9 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("docId").as[Long].collect().toSet
     val got = Map(
-      "lmdirichlet" -> ids(new LMDirichletScorer(r).topK(terms, 100)),
+      "lmdirichlet" -> ids(new SimilarityScorer(r,
+        (_, ttf, _, collTokens, _) =>
+          Similarities.lmDirichlet(ttf, collTokens)).topK(terms, 100)),
       "dfr" -> ids(new SimilarityScorer(r,
         (df, ttf, maxDoc, _, avgdl) =>
           Similarities.dfrGL2(df, ttf, maxDoc, avgdl)).topK(terms, 100)),

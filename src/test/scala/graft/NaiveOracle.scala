@@ -102,6 +102,21 @@ object NaiveOracle {
           if (pf == 0) None
           else Some(id -> BM25.score(wv, pf.toFloat, cache, norm(id)))
         }.toMap
+      case SpanNearQ(terms, slop, inOrder) =>
+        spanNear(terms.map(Seq(_)), slop, inOrder, boost)
+      case SpanNearMultiQ(legs, slop, inOrder) =>
+        spanNear(legs.map(expandLeg), slop, inOrder, boost)
+      case SpanNotQ(include, exclude, pre, post) =>
+        // include occurrences with no exclude occurrence in [p-pre, p+post];
+        // weight from the include term alone
+        if (df(include) == 0L) return Map.empty
+        val wv = BM25.weightValue(BM25.idf(df(include), maxDoc), boost)
+        postings(include).iterator.flatMap { case (id, ps) =>
+          val ex = postings.getOrElse(exclude, Map.empty).getOrElse(id, Vector.empty)
+          val sf = ps.count(p => !ex.exists(e => p - pre <= e && e <= p + post))
+          if (sf == 0) None
+          else Some(id -> BM25.score(wv, sf.toFloat, cache, norm(id)))
+        }.toMap
       case SpanWithinQ(little, big, slop) =>
         spanContain(little, big, slop, within = true, boost)
       case SpanContainingQ(little, big, slop) =>
@@ -127,23 +142,53 @@ object NaiveOracle {
         scores(b).map { case (id, s) => id -> s * boost }
     }
 
-    /** Greedy minimal-end ordered big spans of one doc (the
-      * NearSpansOrdered enumeration contract, written as filters/min
+    /** Greedy minimal-end ordered spans over per-slot position lists
+      * (the NearSpansOrdered enumeration contract, written as filters/min
       * rather than the engine's binary searches). */
-    private def bigSpans(big: Seq[String], slop: Int,
-                         id: Long): Seq[(Int, Int)] =
-      postings(big.head)(id).flatMap { s =>
+    private def orderedSpans(slots: Seq[Seq[Int]], slop: Int): Seq[(Int, Int)] =
+      slots.head.flatMap { s =>
         var prev = s
         var ok = true
-        big.drop(1).foreach { t =>
+        slots.drop(1).foreach { ps =>
           if (ok) {
-            val nxt = postings(t)(id).filter(_ > prev)
+            val nxt = ps.filter(_ > prev)
             if (nxt.isEmpty) ok = false else prev = nxt.min
           }
         }
-        if (ok && (prev - s + 1) - big.length <= slop) Some((s, prev))
+        if (ok && (prev - s + 1) - slots.length <= slop) Some((s, prev))
         else None
       }
+
+    /** A span-near leg's dictionary terms (SpanMultiTermQueryWrapper). */
+    private def expandLeg(q: Query): Seq[String] = q match {
+      case TermQ(t) => Seq(t)
+      case PrefixQ(p) => allTerms.filter(_.startsWith(p))
+      case FuzzyQ(t, e) => allTerms.filter(c => lev(c, t) <= e)
+      case other => throw new IllegalArgumentException(s"leg $other")
+    }
+
+    /** SpanNear over slots of alternative terms: a slot occurs at the
+      * union of its terms' positions; freq = ordered or unordered span
+      * count; weight sums the idf of every present slot term. */
+    private def spanNear(slots: Seq[Seq[String]], slop: Int, inOrder: Boolean,
+                         boost: Float): Map[Long, Float] = {
+      val present = slots.map(_.filter(df(_) > 0L))
+      if (present.isEmpty || present.exists(_.isEmpty)) return Map.empty
+      var idfSum = 0f
+      present.flatten.foreach(t => idfSum += BM25.idf(df(t), maxDoc))
+      val wv = BM25.weightValue(idfSum, boost)
+      val slotPos: Seq[Map[Long, Seq[Int]]] = present.map { sl =>
+        sl.flatMap(t => postings(t).toSeq).groupBy(_._1)
+          .map { case (id, xs) => id -> xs.flatMap(_._2).sorted }
+      }
+      slotPos.map(_.keySet).reduce(_ intersect _).iterator.flatMap { id =>
+        val lists = slotPos.map(_(id))
+        val sf = (if (inOrder) orderedSpans(lists, slop)
+          else unorderedSpans(lists, slop)).length
+        if (sf == 0) None
+        else Some(id -> BM25.score(wv, sf.toFloat, cache, norm(id)))
+      }.toMap
+    }
 
     /** SpanWithin / SpanContaining brute force. */
     private def spanContain(little: String, big: Seq[String], slop: Int,
@@ -157,7 +202,7 @@ object NaiveOracle {
       val docsWithAll =
         (big :+ little).map(t => postings(t).keySet).reduce(_ intersect _)
       docsWithAll.iterator.flatMap { id =>
-        val spans = bigSpans(big, slop, id)
+        val spans = orderedSpans(big.map(postings(_)(id)), slop)
         val lp = postings(little)(id)
         val sf =
           if (within) lp.count(p => spans.exists(se => se._1 <= p && p <= se._2))
@@ -212,6 +257,18 @@ object NaiveOracle {
       scores(q).toSeq
         .filter { case (id, s) => s < s0 || (s == s0 && id > d0) }
         .sortBy { case (id, s) => (-s, id) }.take(k)
+  }
+
+  /** Minimal covering windows over per-slot position lists (the
+    * NearSpansUnordered contract): every [a, b] holding a position of
+    * each slot with no covering proper sub-window, that fits the slop;
+    * ascending. Assumes one token per position across slots. */
+  def unorderedSpans(slots: Seq[Seq[Int]], slop: Int): Seq[(Int, Int)] = {
+    def covers(a: Int, b: Int) = slots.forall(_.exists(p => a <= p && p <= b))
+    val all = slots.flatten.distinct.sorted
+    for (a <- all; b <- all if a <= b && covers(a, b) &&
+      !covers(a + 1, b) && !covers(a, b - 1) &&
+      (b - a + 1) - slots.length <= slop) yield (a, b)
   }
 
   /** The reference sloppy-phrase walk (SloppyPhraseScorer.phraseFreq),

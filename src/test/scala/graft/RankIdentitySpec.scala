@@ -169,6 +169,21 @@ class RankIdentitySpec extends AnyFunSuite {
     checkQuery(qc)
   }
 
+  test("q7j: span-near (ordered, unordered, multi-term legs) and span-not") {
+    val qs = Seq(
+      SpanNearQ(Seq("import", "spark"), 3),
+      SpanNearQ(Seq("spark", "import"), 3, inOrder = false),
+      SpanNearQ(Seq("import", "return", "val"), 12),
+      SpanNearQ(Seq("val", "import", "return"), 12, inOrder = false),
+      SpanNotQ("spark", "import", 2, 2),
+      SpanNearMultiQ(Seq(PrefixQ("im"), TermQ("spark")), 2),
+      SpanNearMultiQ(Seq(TermQ("val"), PrefixQ("da")), 4, inOrder = false))
+    for (sq <- qs) {
+      val q = BoolQ(Seq(Occur.Must -> sq))
+      assert(oracle.topK(q, 10).nonEmpty, s"fixture must have matches: $sq")
+      checkQuery(q, 20)
+    }
+  }
 
   test("multi-term rewrite beyond maxClauseCount raises TooManyClauses") {
     // the corpus has ~1000 idNNN terms + numbers; a tiny limit must throw
@@ -313,13 +328,30 @@ class RankIdentitySpec extends AnyFunSuite {
       "dataset", "data", "set", "void", "val", "def", "id001", "id007",
       "absentzzz")
     def term(): String = pool(rng.nextInt(pool.length))
-    def leaf(): Query = rng.nextInt(10) match {
+    // distinct legs: the unordered walk's minimal windows assume one
+    // token per position across slots
+    def distinctTerms(k: Int): Seq[String] = rng.shuffle(pool).take(k)
+    def leaf(): Query = rng.nextInt(14) match {
       case 0 => PhraseQ(Seq(term(), term()), Seq(0, 1))
       case 1 => PrefixQ(Seq("im", "pri", "id0", "da")(rng.nextInt(4)))
       case 2 => BoostQ(TermQ(term()), 1f + rng.nextInt(3).toFloat / 2f)
       case 3 => // n-term sloppy phrase, repeats allowed (pq-walk semantics)
         val k = 2 + rng.nextInt(3)
         SloppyPhraseQ(Seq.fill(k)(term()), 0 until k, 1 + rng.nextInt(4))
+      case 4 => // ordered span-near, repeats allowed
+        SpanNearQ(Seq.fill(2 + rng.nextInt(2))(term()), rng.nextInt(6))
+      case 5 =>
+        SpanNearQ(distinctTerms(2 + rng.nextInt(2)), rng.nextInt(6),
+          inOrder = false)
+      case 6 =>
+        val Seq(inc, exc) = distinctTerms(2)
+        SpanNotQ(inc, exc, rng.nextInt(3), rng.nextInt(3))
+      case 7 =>
+        val prefix = Seq("im", "pri", "id0", "da")(rng.nextInt(4))
+        val other = distinctTerms(2).find(!_.startsWith(prefix)).get
+        val legs = Seq(PrefixQ(prefix), TermQ(other))
+        SpanNearMultiQ(if (rng.nextBoolean()) legs else legs.reverse,
+          rng.nextInt(6), inOrder = rng.nextBoolean())
       case _ => TermQ(term())
     }
     def occur(): Occur = rng.nextInt(20) match {
